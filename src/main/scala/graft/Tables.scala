@@ -151,46 +151,6 @@ object Tables {
     if (splitEst >= want) df else df.repartition(want)
   }
 
-  /** Runs an ITERATION LOOP's body under the fixed-width execution
-    * regime (r17, guide §1 "measure first" finding): AQE off and
-    * `spark.sql.shuffle.partitions` pinned to the loop's
-    * [[adaptiveParts]]-derived width, previous values restored after.
-    *
-    * Why: under AQE every exchange of every per-round eager
-    * localCheckpoint materializes as its OWN driver job (~25-30 ms of
-    * scheduling floor each — ProfileOne r16: q_page_rank was 83 jobs
-    * for 86 tasks, the wall dominated by job latency, not task work).
-    * Inside a loop AQE buys nothing the loop hasn't already done by
-    * hand: every in-loop exchange is either an explicit
-    * `repartition(nParts, key)` or a groupBy whose width this regime
-    * pins to the SAME size-derived nParts, so runtime coalescing is a
-    * no-op — but its stage-by-stage materialization still charges the
-    * per-job floor per exchange. With the regime a round's checkpoint
-    * is ONE job. Setup (edge/node checkpoints embedding corpus-scale
-    * feeding queries) stays OUTSIDE the regime so big one-off shuffles
-    * keep AQE coalescing and skew handling.
-    *
-    * Scale honesty: the width is derived from data bytes
-    * ([[adaptiveParts]]), not from local core count, so the regime is
-    * the same decision at 100 TB (where nParts = full parallelism).
-    * What a cluster loses is AQE's in-loop skew-join splitting;
-    * `spark.graft.iter.aqe=true` opts a deployment back into AQE
-    * rounds without a code change. */
-  def withIterConf[T](spark: SparkSession, parts: Int)(body: => T): T = {
-    val conf = spark.conf
-    if (conf.get("spark.graft.iter.aqe", "false") == "true") return body
-    val aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val sp = conf.get("spark.sql.shuffle.partitions",
-      spark.sparkContext.defaultParallelism.toString)
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body
-    finally {
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.shuffle.partitions", sp)
-    }
-  }
-
   /** Width for an ITERATION's checkpointed tables, derived from the
     * input's estimated bytes (r16, guide §2: partitioning must be
     * scale-adaptive, not a constant tuned for local mode or the
@@ -214,7 +174,7 @@ object Tables {
       // round of a cluster-scale loop to ~1 task on a bad guess is the
       // expensive failure mode — derived plans keep a
       // defaultParallelism/8 floor. Loops whose width truly matters
-      // re-derive it from a materialized count (dedupClusters).
+      // re-derive it from a materialized count ([[ops.Iterate.sized]]).
       val bareScan = plan match {
         case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
         case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true

@@ -118,27 +118,21 @@ object BpeTrain {
       }
       out.toSeq
     })
-    var words = docToks.select(explode(col("toks")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(split(col("w"), "").as("syms"), col("freq"))
-      .repartition(nParts)
-      .localCheckpoint()
-    // re-size the LOOP width from the materialized vocabulary count
-    // (r16, the dedupClusters discipline): the distinct-word table is
-    // vocabulary-scale — at test SFs a few thousand rows — and a
-    // defaultParallelism-wide checkpoint froze every merge round at
-    // that many near-empty tasks. One cheap count job right-sizes the
-    // whole loop; a 10^8-row production vocabulary keeps full width.
-    val vParts = math.max(1L, math.min(nParts.toLong,
-      words.count() / 262144L + 1L)).toInt
-    if (vParts < nParts)
-      words = words.repartition(vParts).localCheckpoint()
+    // the distinct-word table is vocabulary-scale — at test SFs a few
+    // thousand rows — so the loop is sized from its materialized count
+    // (a defaultParallelism-wide table froze every merge round at that
+    // many near-empty tasks); a 10^8-row production vocabulary keeps
+    // full width
+    var (words, _, vParts) = Iterate.sized(
+      docToks.select(explode(col("toks")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("freq"))
+        .select(split(col("w"), "").as("syms"), col("freq")),
+      nParts)
     val merges = mutable.Buffer.empty[(String, String, Long)]
     var exhausted = false
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    graft.Tables.withIterConf(spark, vParts) {
+    Iterate(spark, vParts) { loop =>
     while (merges.size < nMerges && !exhausted) {
-      val top = words
+      val top = loop.collect(words
         .filter(size(col("syms")) > 1)
         .select(col("freq"),
                 explode(arrays_zip(
@@ -147,18 +141,17 @@ object BpeTrain {
         .groupBy(col("p.0").as("a"), col("p.1").as("b"))
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(batchMax).collect()
+        .limit(batchMax))
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
       if (top.isEmpty) exhausted = true
       else {
         val batch = greedyBatch(top, nMerges - merges.size, batchMax)
         merges ++= batch
-        words = words
+        words = loop.checkpoint(words
           .select(mergeBatch(col("syms"),
                              array(batch.map(m => lit(m._1)): _*),
                              array(batch.map(m => lit(m._2)): _*)).as("syms"),
-                  col("freq"))
-          .localCheckpoint()
+                  col("freq")))
       }
     }
     }

@@ -111,16 +111,14 @@ object Clustering {
       .otherwise(raise_error(concat(
         lit("kmeans: embedding value has >50 fraction bits: "),
         col("x").cast("string"))))
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    Tables.withIterConf(v.sparkSession, Tables.adaptiveParts(v)) {
+    Iterate(v.sparkSession, Tables.adaptiveParts(v)) { loop =>
     for (_ <- 1 to iters) {
-      val means = assign(v, centroids)
+      val means = loop.collect(assign(v, centroids)
         .select(col("cluster"), posexplode(col("v")).as(Seq("d", "x")))
         .groupBy("cluster", "d")
         .agg(sum(xs).as("s"), count(lit(1)).as("n"))
         .select(col("cluster"), col("d"),
-                (col("s").cast("double") / (lit(S) * col("n"))).as("m"))
-        .collect()
+                (col("s").cast("double") / (lit(S) * col("n"))).as("m")))
         .groupBy(_.getInt(0))
         .map { case (cid, rows) =>
           val c = new Array[Double](dim)

@@ -502,32 +502,39 @@ object Dedup {
     * presentation-only work the propagation never reads; the DuckDB
     * recursive-CTE oracle's closure is identical either way. */
   private val clusterTablePaths =
-    new IndexCache[String]("documents", { (s, d) =>
+    new IndexCache[(String, Int)]("documents", { (s, d) =>
       val p = java.nio.file.Files
         .createTempDirectory("graft_dedup_clusters").toString +
         "/clusters.parquet"
-      dedupClusters(jaccardVerifiedFrom(corpusTokenSets(s, d), 0.9)
-        .dropDuplicates("doc_a", "doc_b"))
-        .write.mode("overwrite").parquet(p)
-      p
+      val (clusters, rounds) = clustersAndRounds(
+        jaccardVerifiedFrom(corpusTokenSets(s, d), 0.9)
+          .dropDuplicates("doc_a", "doc_b"))
+      clusters.write.mode("overwrite").parquet(p)
+      (p, rounds)
     })
 
   private[graft] def corpusClusters(spark: SparkSession,
                                     dir: String): DataFrame =
-    graft.Tables.loadPath(spark, clusterTablePaths.get(spark, dir))
+    graft.Tables.loadPath(spark, clusterTablePaths.get(spark, dir)._1)
+
+  /** Propagation rounds the corpus cluster table took to converge. */
+  private[graft] def corpusClusterRounds(spark: SparkSession,
+                                         dir: String): Int =
+    clusterTablePaths.get(spark, dir)._2
 
   private[graft] def clusterTableEntryCount: Int =
     clusterTablePaths.entryCount
 
-  /** Round count of the last [[dedupClusters]] run — observability for
-    * the O(log d) pointer-jumping claim (pinned by the long-chain
-    * fixture in GraftFacadeSpec; at scale this is a job metric). */
-  @volatile private[graft] var lastPropagationRounds: Int = 0
-
   /** [[qDedupCluster]]'s engine over ANY (doc_a, doc_b, ...) pair
     * DataFrame — jaccard pairs, MinHash pairs, embedding pairs all
     * work; the library entry point ([[graft.Graft.dedupClusters]]). */
-  def dedupClusters(pairDf: DataFrame): DataFrame = {
+  def dedupClusters(pairDf: DataFrame): DataFrame =
+    clustersAndRounds(pairDf)._1
+
+  /** [[dedupClusters]] and its propagation round count — observability
+    * for the O(log d) pointer-jumping claim (pinned by the long-chain
+    * fixture in GraftFacadeSpec). */
+  private[graft] def clustersAndRounds(pairDf: DataFrame): (DataFrame, Int) = {
     // localCheckpoint (not persist): each round's plan references the
     // previous round TWICE (directly and through nbr_min), so without
     // lineage truncation the logical plan doubles per round —
@@ -549,71 +556,51 @@ object Dedup {
     // table was re-shuffled by dst in EVERY round — dst-partitioning
     // satisfies that join for free (the list is symmetric, so the two
     // layouts hold identical rows). The one groupBy(src) that keyed
-    // off the old layout is the seed aggregate, paid once.
-    var edges = pairDf
+    // off the old layout is the seed aggregate, paid once. The feeding
+    // pair query's size estimate is usually unusable, so the loop is
+    // sized from the materialized edge count.
+    val (edges, _, itParts) = Iterate.sized(pairDf
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(nParts, col("dst"))
-      .localCheckpoint()
-    // re-size the ITERATION width from the MATERIALIZED edge count
-    // (r16): the feeding pair query's size estimate is usually
-    // unusable (adaptiveParts clamps to full parallelism), but once
-    // the checkpoint exists the true count is one cheap job — a
-    // small component graph then iterates at matching width instead
-    // of paying `defaultParallelism` tasks per stage per round. At
-    // scale the count keeps the full width and this is a no-op.
-    val itParts = math.max(1L, math.min(nParts.toLong,
-      edges.count() / 262144L + 1L)).toInt
-    if (itParts < nParts)
-      edges = edges.repartition(itParts, col("dst")).localCheckpoint()
-    // EAGER per-round checkpoints (r16 — see Graph.scala header): the
-    // labels table feeds BOTH the convergence aggregate and the next
-    // propagation round, and a lazy first materialization of that
-    // shared checkpoint can race concurrent AQE stages into redundant
-    // recompute or the doCheckpoint/getCacheLocs deadlock. Seed with
-    // min(id, min neighbour) — the first propagation round for free
-    // (one groupBy on the edge list, no join).
+      .select(col("e.src").as("src"), col("e.dst").as("dst")),
+      nParts, col("dst"))
+    // Seed with min(id, min neighbour) — the first propagation round
+    // for free (one groupBy on the edge list, no join).
     // labels only ever DECREASE (min propagation), so the label sum
-    // strictly decreases iff any label changed — a 1-row aggregate per
-    // round instead of a (self-lineage-ambiguous) prev⋈next join.
-    // DECIMAL(38,0), not Long: billions of 64-bit ids sum past 2^63
-    // and a wrapped-equal Long sum would falsely signal convergence.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    val labels = graft.Tables.withIterConf(pairDf.sparkSession, itParts) {
-      var lbls = edges.groupBy(col("src").as("id"))
-        .agg(least(col("src"), min(col("dst"))).as("label"))
-        .localCheckpoint()
-      // the seed scalar rides node count alongside the convergence sum
-      // (one job): with the loop regime AQE no longer converts the
-      // per-round joins to broadcast at runtime, so the decision is
-      // made HERE from the measured node count — a label table provably
-      // under ~8 MB broadcasts in every round (map-side joins, the edge
-      // list is never sorted or re-shuffled); a cluster-scale node set
-      // keeps the partitioned joins. Same rule AQE applied, decided
-      // once from data, honest at any scale.
-      val first = lbls
-        .agg(sum(col("label").cast("decimal(38,0)")), count(lit(1))).head()
+    // strictly decreases iff any label changed — a scalar observed on
+    // each round's checkpoint instead of a (self-lineage-ambiguous)
+    // prev⋈next join. DECIMAL(38,0), not Long: billions of 64-bit ids
+    // sum past 2^63 and a wrapped-equal Long sum would falsely signal
+    // convergence.
+    val labelSum = sum(col("label").cast("decimal(38,0)"))
+    val (labels, rounds) = Iterate(pairDf.sparkSession, itParts) { loop =>
+      // the seed scalar rides node count alongside the convergence sum:
+      // with AQE off in the loop nothing converts the per-round joins to
+      // broadcast at runtime, so the decision is made HERE from the
+      // measured node count — a label table provably under ~8 MB
+      // broadcasts in every round (map-side joins, the edge list is
+      // never sorted or re-shuffled); a cluster-scale node set keeps
+      // the partitioned joins. Same rule AQE applied, decided once from
+      // data, honest at any scale.
+      var (lbls, first) = loop.observed(edges.groupBy(col("src").as("id"))
+        .agg(least(col("src"), min(col("dst"))).as("label")),
+        labelSum, count(lit(1)))
       val bcastLabels = first.getLong(1) * 48L < (8L << 20)
       var prevSum = first.getDecimal(0)
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < 50) {
-        lbls = propagationRound(edges, lbls, bcastLabels).localCheckpoint()
-        val s = labelSum(lbls)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        rounds += 1
+      // pointer jumping closes any component in O(log diameter) rounds
+      val rounds = loop.fixpoint(50, failAtCap = true) { _ =>
+        val (next, s) = loop.observed(
+          propagationRound(edges, lbls, bcastLabels), labelSum)
+        val converged = s.getDecimal(0).compareTo(prevSum) == 0
+        lbls = next
+        prevSum = s.getDecimal(0)
+        converged
       }
-      lastPropagationRounds = rounds
-      lbls
+      (lbls, rounds)
     }
     val sized = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
-    finishClusters(labels, sized)
+    (finishClusters(labels, sized), rounds)
   }
 
   /** One min-label propagation + pointer-jumping round, factored out

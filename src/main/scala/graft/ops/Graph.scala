@@ -10,14 +10,16 @@ import graft.{Queries, Tables}
   * signal for corpus curation (rank-weighted sampling, spam
   * demotion), composed directly on [[Links.extractLinks]] output.
   *
-  * Iteration shape (the [[Dedup.dedupClusters]] discipline): the edge
-  * list is repartitioned on src and localCheckpoint'ed ONCE; each of
-  * the fixed `iters` rounds is one hash shuffle (contribution sum
-  * grouped by dst) plus a 1-row dangling-mass aggregate that stays IN
-  * PLAN (cross-join of a scalar aggregate — no collect in the data
-  * path), and ends in an EAGER localCheckpoint so the logical plan
-  * never grows with the round count. At 100 TB the per-round cost is
-  * one shuffle of the rank table keyed the same way every round.
+  * Iteration shape (every loop in this file runs on the [[Iterate]]
+  * skeleton: private loop session, eager per-round checkpoint,
+  * observed convergence scalar, round cap): the edge list is
+  * repartitioned on src and localCheckpoint'ed ONCE; each of the
+  * fixed `iters` rounds is one hash shuffle (contribution sum grouped
+  * by dst) plus a 1-row dangling-mass aggregate that stays IN PLAN
+  * (cross-join of a scalar aggregate — no collect in the data path),
+  * and ends in an EAGER checkpoint so the logical plan never grows
+  * with the round count. At 100 TB the per-round cost is one shuffle
+  * of the rank table keyed the same way every round.
   *
   * EAGER, not lazy (r16): a LAZILY-checkpointed round table is first
   * materialized inside the NEXT round's action, where AQE runs the
@@ -83,16 +85,11 @@ object Graph {
     // per-round EAGER checkpoint: a 2-round cadence was A/B'd and lost
     // (ProfileOne: 5 fewer jobs but +620 ms of recomputed stage work —
     // exchange reuse does not cover the round's final co-located join,
-    // which both next-round consumers then re-evaluate). The loop runs
-    // under the fixed-width regime (r17): see [[Tables.withIterConf]].
-    val rank = Tables.withIterConf(spark, nParts) {
-      var r = nodes
-        .select(col("node"), col("dang"), (lit(1.0) / lit(nc)).as("r"))
-        .localCheckpoint()
-      for (_ <- 1 to iters) {
-        r = pageRankRound(nodes, edges, r, nc)
-          .localCheckpoint()
-      }
+    // which both next-round consumers then re-evaluate)
+    val rank = Iterate(spark, nParts) { loop =>
+      var r = loop.checkpoint(
+        nodes.select(col("node"), col("dang"), (lit(1.0) / lit(nc)).as("r")))
+      for (_ <- 1 to iters) r = loop.checkpoint(pageRankRound(nodes, edges, r, nc))
       r
     }
     rank.select(col("node"), round(col("r"), 6).as("pr")).orderBy("node")
@@ -183,12 +180,10 @@ object Graph {
       .orderBy("node")
     val d = lit(Damping.toDouble)
     val t = lit(Teleport.toDouble)
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    val rank = Tables.withIterConf(spark, nParts) {
-      var r0 = nodes
+    val rank = Iterate(spark, nParts) { loop =>
+      var r0 = loop.checkpoint(nodes
         .select(col("node"), col("dang"), col("is_seed"),
-                (col("is_seed") / lit(ns)).as("r"))
-        .localCheckpoint()
+                (col("is_seed") / lit(ns)).as("r")))
       for (_ <- 1 to iters) {
         val contrib = edges
           .join(r0, edges("src") === r0("node"))
@@ -196,13 +191,12 @@ object Graph {
           .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
         val dangling = r0.where(col("dang"))
           .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
-        r0 = nodes
+        r0 = loop.checkpoint(nodes
           .join(contrib, nodes("node") === contrib("dst"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("node"), col("dang"), col("is_seed"),
                   ((t + d * col("dm")) * col("is_seed") / lit(ns) +
-                    d * coalesce(col("contrib"), lit(0.0))).as("r"))
-          .localCheckpoint()
+                    d * coalesce(col("contrib"), lit(0.0))).as("r")))
       }
       r0
     }
@@ -385,8 +379,7 @@ object Graph {
       .select(col("node"), lit(1.0).as("h"))
       .localCheckpoint()
     var auth = hub // placeholder; assigned in round 1
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    Tables.withIterConf(spark, nParts) {
+    Iterate(spark, nParts) { loop =>
     for (k <- 1 to iters) {
       // auth is NOT checkpointed on intermediate rounds (r16): it has
       // exactly ONE consumer (this round's hub update), so the hub
@@ -399,19 +392,17 @@ object Graph {
       val authRaw = edges.join(hub, edges("src") === hub("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
         .select(col("dst").as("node"), col("a"))
-      auth = if (k == iters) authRaw.localCheckpoint() else authRaw
-      hub = edgesByDst.join(auth, edgesByDst("dst") === auth("node"))
+      auth = if (k == iters) loop.checkpoint(authRaw) else authRaw
+      hub = loop.checkpoint(edgesByDst.join(auth, edgesByDst("dst") === auth("node"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
-        .select(col("src").as("node"), col("h"))
-        .localCheckpoint()
+        .select(col("src").as("node"), col("h")))
       if (k % 5 == 0 && k < iters) {
         val s = hub.agg(sum(col("h")).as("s"))
-        hub = hub.crossJoin(broadcast(s))
+        hub = loop.checkpoint(hub.crossJoin(broadcast(s))
           .select(col("node"),
                   (col("h") / when(col("s") > 0d,
                       pow(lit(2.0), floor(log(2.0, col("s")))))
-                    .otherwise(lit(1.0))).as("h"))
-          .localCheckpoint()
+                    .otherwise(lit(1.0))).as("h")))
       }
     }
     }
@@ -563,12 +554,10 @@ object Graph {
         .select(col("a"), col("a").as("b")))
       .repartition(nParts, col("b"))
       .localCheckpoint()
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    val labels = Tables.withIterConf(spark, nParts) {
-      var lbls = und.select(col("a").as("node")).distinct()
+    val labels = Iterate(spark, nParts) { loop =>
+      var lbls = loop.checkpoint(und.select(col("a").as("node")).distinct()
         .repartition(nParts, col("node"))
-        .select(col("node"), col("node").as("lbl"))
-        .localCheckpoint()
+        .select(col("node"), col("node").as("lbl")))
       for (_ <- 1 to iters) {
         val freq = und.join(lbls, und("b") === lbls("node"))
           .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("cnt"))
@@ -581,9 +570,8 @@ object Graph {
           .groupBy(col("a"))
           .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("b"))
           .select(col("a").as("node"), col("b.lbl").as("newl"))
-        lbls = lbls.join(top, Seq("node"), "left")
-          .select(col("node"), coalesce(col("newl"), col("lbl")).as("lbl"))
-          .localCheckpoint()
+        lbls = loop.checkpoint(lbls.join(top, Seq("node"), "left")
+          .select(col("node"), coalesce(col("newl"), col("lbl")).as("lbl")))
       }
       lbls
     }
@@ -808,11 +796,12 @@ object Graph {
     * Σ|frontier_d| edge lookups ≈ one pass over the reachable edges
     * across ALL rounds, not per round. Each round is one equi-join
     * (frontier repartitioned on the edge key), one distinct, one
-    * anti-join against the settled set, and a 1-row count that both
-    * detects the natural end of the graph (early exit on an empty
-    * frontier — BFS on a shallow graph must not pay the full cap) and
-    * stays bounded driver state. Depths are integers end to end:
-    * bit-exact against the oracle's bounded recursive CTE. */
+    * anti-join against the settled set, and a frontier count
+    * (observed on the frontier's checkpoint job) that detects the
+    * natural end of the graph (early exit on an empty frontier — BFS
+    * on a shallow graph must not pay the full cap). Depths are
+    * integers end to end: bit-exact against the oracle's bounded
+    * recursive CTE. */
   private[graft] val BfsMaxDepth = 8
 
   def bfsDepth(edgeDf: DataFrame, seeds: DataFrame,
@@ -832,27 +821,23 @@ object Graph {
       .unionAll(seedNodes.select(col("node")))
       .distinct()
       .localCheckpoint()
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    val dist = Tables.withIterConf(spark, nParts) {
-      var dst = seedNodes
-        .withColumn("depth", lit(0L))
-        .localCheckpoint()
+    val dist = Iterate(spark, nParts) { loop =>
+      var dst = loop.checkpoint(seedNodes.withColumn("depth", lit(0L)))
       var frontier = dst
-      var d = 1
-      var done = false
-      while (d <= maxDepth && !done) {
+      loop.fixpoint(maxDepth, failAtCap = false) { d =>
         val reached = frontier
           .join(edges, frontier("node") === edges("src"))
           .select(col("dst").as("node")).distinct()
-        val fresh = reached.join(dst, Seq("node"), "left_anti")
-          .withColumn("depth", lit(d.toLong))
-          .localCheckpoint()
-        if (fresh.isEmpty) done = true
-        else {
-          dst = dst.unionAll(fresh).localCheckpoint()
+        val (fresh, n) = loop.observed(
+          reached.join(dst, Seq("node"), "left_anti")
+            .withColumn("depth", lit(d.toLong)),
+          count(lit(1)))
+        val done = n.getLong(0) == 0L
+        if (!done) {
+          dst = loop.checkpoint(dst.unionAll(fresh))
           frontier = fresh
-          d += 1
         }
+        done
       }
       dst
     }
@@ -965,8 +950,9 @@ object Graph {
     * Scale shape per round: one partial-agg degree count riding the
     * same src hash-partitioning as the edge table, two broadcast-able
     * semi-joins (the survivor list only SHRINKS, so late rounds get
-    * cheaper), eager localCheckpoint to cut lineage, two 1-row counts
-    * of driver traffic. */
+    * cheaper), eager localCheckpoint to cut lineage, and the pruned
+    * edge count observed on that checkpoint's job as the convergence
+    * scalar. */
   def kCore(edgeDf: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val spark = edgeDf.sparkSession
@@ -974,51 +960,26 @@ object Graph {
     val nParts = Tables.adaptiveParts(edgeDf)
     val base = edgeDf.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    var edges = base
+    // the symmetrize+distinct feed is a derived plan whose size
+    // Catalyst cannot estimate: the loop is sized from its edge count
+    var (edges, before, itParts) = Iterate.sized(base
       .unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
-    var before = edges.count()
-    // re-size the ITERATION width from the MATERIALIZED edge count
-    // (r17 — the dedupClusters discipline): the symmetrize+distinct
-    // feed is a derived plan whose size Catalyst cannot estimate, so
-    // adaptiveParts clamps to full parallelism — and with the
-    // fixed-width regime below there is no AQE left to coalesce the
-    // per-round shuffles back down (measured: q_kcore 1.54 → 2.32 s,
-    // 687 tasks for a ~700-edge graph). One cheap job after the
-    // checkpoint gives the true count; a cluster-scale edge list keeps
-    // the full width and this is a no-op.
-    val itParts = math.max(1L, math.min(nParts.toLong,
-      before / 262144L + 1L)).toInt
-    if (itParts < nParts)
-      edges = edges.repartition(itParts, col("src")).localCheckpoint()
-    var converged = before == 0L
-    var r = 0
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    Tables.withIterConf(spark, itParts) {
-    while (!converged && r < maxRounds) {
-      val surv = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("src").as("node"))
-        .localCheckpoint() // feeds both semi-joins below
-      val pruned = edges
-        .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .localCheckpoint()
-      val after = pruned.count()
-      converged = after == before
-      edges = pruned
-      before = after
-      r += 1
+      .distinct(), nParts, col("src"))
+    if (before > 0L) Iterate(spark, itParts) { loop =>
+      loop.fixpoint(maxRounds, failAtCap = true) { _ =>
+        val surv = loop.checkpoint(edges.groupBy("src").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select(col("src").as("node"))) // feeds both semi-joins below
+        val (pruned, after) = loop.observed(edges
+          .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst"), count(lit(1)))
+        val converged = after.getLong(0) == before
+        edges = pruned
+        before = after.getLong(0)
+        converged
+      }
     }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kCore: no fixpoint after $maxRounds rounds (peeling depth " +
-        "exceeds the cap — raise maxRounds; a k-adversarial path graph " +
-        "peels one layer per round)")
     edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_deg"))
       .orderBy("node")
@@ -1117,34 +1078,27 @@ object Graph {
       .unionAll(seedNodes)
       .distinct()
       .localCheckpoint()
-    var dist = seedNodes.withColumn("dist", lit(0L)).localCheckpoint()
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    Tables.withIterConf(spark, nParts) {
     // convergence scalar: reached-count and total distance; distances
     // only DECREASE and the reached set only GROWS under min
     // relaxation, so an unchanged (count, sum) pair means a fixpoint —
     // and a fixpoint is final (further rounds are idempotent), so
     // early exit returns EXACTLY the fixed-round result. Sum carried
     // in DECIMAL(38,0): the CC overflow-safe discipline.
-    def scalar(d: org.apache.spark.sql.DataFrame): (Long, java.math.BigDecimal) = {
-      val r = d.agg(count(lit(1)), sum(col("dist").cast("decimal(38,0)"))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    var prev = scalar(dist)
-    var done = false
-    var k = 0
-    while (k < rounds && !done) {
-      val relaxed = dist
-        .join(edges, dist("node") === edges("src"))
-        .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      val cur = scalar(dist)
-      if (cur == prev) done = true
-      prev = cur
-      k += 1
-    }
+    val scalar = Seq(count(lit(1)), sum(col("dist").cast("decimal(38,0)")))
+    val dist = Iterate(spark, nParts) { loop =>
+      var (d, prev) = loop.observed(seedNodes.withColumn("dist", lit(0L)), scalar: _*)
+      loop.fixpoint(rounds, failAtCap = false) { _ =>
+        val relaxed = d
+          .join(edges, d("node") === edges("src"))
+          .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"))
+        val (next, cur) = loop.observed(d.unionAll(relaxed)
+          .groupBy("node").agg(min(col("dist")).as("dist")), scalar: _*)
+        val converged = cur == prev
+        d = next
+        prev = cur
+        converged
+      }
+      d
     }
     nodes.join(dist, Seq("node"), "left")
       .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))

@@ -744,12 +744,6 @@ object TextAnalysis {
                 slice(col("toks"), lit(1), size(col("toks")) - 1),
                 slice(col("toks"), lit(2), size(col("toks")) - 1))).as("b"))
       .select(col("doc_id"), col("b.0").as("w1"), col("b.1").as("w2"))
-    // bc is consumed FOUR ways (probe join, successor, continuation,
-    // type total); it is vocab²-bounded (bigram TYPES, not the
-    // stream), so one eager checkpoint materializes the corpus-scale
-    // bigram explode + count once and every model table reads blocks
-    // (r17, ProfileOne: the un-cached form re-ran the corpus scan per
-    // consumer — five scan stages per execution).
     val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val lc = bc.groupBy("w1")
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1fwd"))

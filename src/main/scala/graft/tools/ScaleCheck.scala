@@ -310,12 +310,11 @@ object ScaleCheck {
     println(f"${"query"}%-22s ${"t_base"}%8s ${"t_10x"}%8s ${"rows_b"}%9s ${"rows_10x"}%9s ${"exp"}%6s decl")
     Subset.filter(q => only.forall(_.exists(q._1.contains))).foreach { case (name, decl) =>
       val (tb, nb) = time(name, base)
-      val roundsB = graft.ops.Dedup.lastPropagationRounds
       val (tx, nx) = time(name, big)
-      val roundsX = graft.ops.Dedup.lastPropagationRounds
       val e = math.log(tx / tb) / math.log(ratio)
+      def rounds(dir: String) = graft.ops.Dedup.corpusClusterRounds(spark, dir)
       val extra = if (name == "q_dedup_cluster")
-        s"  rounds $roundsB -> $roundsX" else ""
+        s"  rounds ${rounds(base)} -> ${rounds(big)}" else ""
       println(f"$name%-22s $tb%8.2f $tx%8.2f $nb%9d $nx%9d $e%6.2f $decl%4.1f$extra")
     }
     spark.stop()

@@ -2,15 +2,44 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 
-/** The one `private[sql]` doorway a third-party plan-level extension
-  * needs: wrapping a custom [[LogicalPlan]] node back into a public
-  * DataFrame. Same technique every open-source Spark extension with
-  * custom operators uses (a shim object under `org.apache.spark.sql`);
-  * everything else in graft sticks to public API.
+/** The `private[sql]` doorways a third-party plan-level extension
+  * needs: wrapping a [[LogicalPlan]] into a public DataFrame of a
+  * given session, and deriving a private session from another. Same
+  * technique every open-source Spark extension with custom operators
+  * uses (a shim object under `org.apache.spark.sql`); everything else
+  * in graft sticks to public API.
   */
 object Shims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A private session for one iteration loop ([[graft.ops.Iterate]]):
+    * a new session on the same SparkContext and cache, carrying a copy
+    * of `spark`'s SQL conf and optimizer extensions — so a loop plans
+    * what `spark` would plan — with AQE off and `parts` shuffle
+    * partitions. `spark` itself is not touched.
+    *
+    * Artifact isolation is off in the loop session: an isolated session
+    * gets its own executor class loader, and the codegen cache is keyed
+    * by class loader, so each loop session would recompile every loop
+    * stage (measured with cloned sessions: 17 Janino compiles and
+    * +0.3-0.4 s on every q_page_rank call). Without isolation all loop
+    * sessions share the default loader and its compiled classes. Plans
+    * are rebound analyzed, so the loop session needs none of `spark`'s
+    * temp views or registered functions. */
+  def loopSession(spark: SparkSession, parts: Int): SparkSession = {
+    val caller = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val s = caller.newSession()
+    val conf = s.sessionState.conf
+    caller.sessionState.conf.getAllConfs.foreach { case (k, v) => conf.setConfString(k, v) }
+    conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    conf.setConf(SQLConf.SHUFFLE_PARTITIONS, parts)
+    conf.setConf(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED, false)
+    s.experimental.extraOptimizations = caller.experimental.extraOptimizations
+    s.experimental.extraStrategies = caller.experimental.extraStrategies
+    s
+  }
 }

@@ -143,17 +143,18 @@ class GraftFacadeSpec extends AnyFunSuite {
     import graft.ops.Dedup
     // worst case for plain min-propagation: a pure chain, diameter 199
     // — without pointer jumping it needs ~100 rounds and would hit the
-    // 50-round cap; with label(label) compression it needs ~log2(200)
+    // 50-round cap (and throw); with label(label) compression it needs
+    // ~log2(200)
     val chain = (1L to 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val c = Graft.dedupClusters(chain).collect()
+    val (clusters, rounds) = Dedup.clustersAndRounds(chain)
+    val c = clusters.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(c.length == 200)
     assert(c.forall(_._2 == 1L), "single component labeled by min id")
     assert(c.forall(_._3 == 200L))
     assert(c.count(_._4) == 1 && c.find(_._4).get._1 == 1L)
-    assert(Dedup.lastPropagationRounds <= 10,
-      s"pointer jumping should close a 199-edge chain in ~8 rounds, " +
-        s"took ${Dedup.lastPropagationRounds}")
+    assert(rounds <= 10,
+      s"pointer jumping should close a 199-edge chain in ~8 rounds, took $rounds")
   }
 
   test("dedupClusters: huge 64-bit ids — convergence sum must not wrap") {

@@ -1,0 +1,119 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.{Graph, Iterate}
+
+/** The loop skeleton every iterative operator runs on ([[Iterate]]):
+  * round caps fail loudly, and a loop's AQE-off fixed-width regime
+  * stays on the loop's private session — the caller's conf never
+  * changes, so a query running beside a loop keeps AQE and its
+  * result. */
+class IterateSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val Aqe = "spark.sql.adaptive.enabled"
+  private val Width = "spark.sql.shuffle.partitions"
+
+  test("fixpoint: a round whose scalar never repeats throws at the cap") {
+    var rounds = 0
+    val e = intercept[IllegalStateException] {
+      Iterate(spark, 2) { loop =>
+        var df = spark.range(8).toDF("x")
+        var prev: Any = null
+        loop.fixpoint(3, failAtCap = true) { _ =>
+          rounds += 1
+          val (next, s) = loop.observed(df.select((col("x") + 1).as("x")), sum(col("x")))
+          val converged = s.get(0) == prev
+          df = next
+          prev = s.get(0)
+          converged
+        }
+      }
+    }
+    assert(rounds == 3)
+    assert(e.getMessage.contains("3 rounds"), e.getMessage)
+  }
+
+  test("loop rounds run AQE-off at the loop width; the caller's conf reads unchanged") {
+    // the probe runs synchronously inside every optimization, reading
+    // the caller's conf and the conf of the session planning the query
+    // (a loop session copies the caller's optimizer extensions)
+    val seen = new ConcurrentLinkedQueue[(String, String, Boolean, Int)]()
+    val probe = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val planning = SQLConf.get
+        seen.add((spark.conf.get(Aqe), spark.conf.get(Width),
+          planning.adaptiveExecutionEnabled, planning.numShufflePartitions))
+        plan
+      }
+    }
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+      .toDF("src", "dst")
+    val width = Tables.adaptiveParts(edges)
+    val caller = (spark.conf.get(Aqe), spark.conf.get(Width))
+    assert(caller._1 == "true" && caller._2.toInt != width)
+    val extra = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra :+ probe
+    val pr = try {
+      val df = Graft.pageRank(edges, iters = 3)
+      df.collect()
+      df
+    } finally spark.experimental.extraOptimizations = extra
+    val s = seen.asScala.toSeq
+    assert(s.nonEmpty)
+    assert(s.forall(x => (x._1, x._2) == caller),
+      s"caller conf changed during the loop: ${s.map(x => (x._1, x._2)).distinct}")
+    assert(s.exists(x => !x._3 && x._4 == width),
+      s"no plan ran AQE-off at width $width: ${s.map(x => (x._3, x._4)).distinct}")
+    // the loop's result belongs to the caller's session again
+    assert(pr.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+    // a loop checkpoint keeps the pinned width: AQE would have coalesced
+    // these 7 tiny groups into one partition
+    Iterate(spark, 3) { loop =>
+      val cp = loop.checkpoint(spark.range(100).groupBy((col("id") % 7).as("k")).count())
+      val parts = cp.queryExecution.analyzed.collectFirst {
+        case r: LogicalRDD => r.rdd.getNumPartitions
+      }
+      assert(parts.contains(3), parts)
+      assert((spark.conf.get(Aqe), spark.conf.get(Width)) == caller)
+    }
+  }
+
+  test("concurrent: TPC-H q1 beside a running pageRank keeps AQE and its serial result") {
+    val dir = TestSpark.sf0001
+    def q1() = Queries.all("q_agg_scan")(spark, dir)
+    val serial = q1().collect().toSeq
+    val edges = Graph.pageEdges(spark, dir)
+    @volatile var done = false
+    @volatile var failure: Throwable = null
+    val loop = new Thread(() =>
+      try Graft.pageRank(edges).collect()
+      catch { case t: Throwable => failure = t }
+      finally done = true)
+    loop.start()
+    val runs = scala.collection.mutable.Buffer.empty[(Boolean, Seq[Row])]
+    while (!done || runs.size < 3) {
+      val df = q1()
+      val adaptive = df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+      runs += ((adaptive, df.collect().toSeq))
+    }
+    loop.join()
+    assert(failure == null, s"pageRank failed: $failure")
+    assert(runs.forall(_._1),
+      s"${runs.count(!_._1)} of ${runs.size} q1 runs planned without AQE")
+    assert(runs.forall(_._2 == serial))
+  }
+}
