@@ -829,15 +829,6 @@ object Dedup {
     val base = graft.Tables.widen(docToks
       .select(col("doc_id").cast("long").as("doc_id"), col("toks")),
       bytesPerTask = 64L << 10)
-    spanDepthFrame(base, widths)
-      .localCheckpoint()
-  }
-
-  /** [[spanDepthProfile]]'s pipeline WITHOUT the final checkpoint,
-    * factored out so its plan shape is dumpable/pinnable (the query's
-    * own explain is a vacuous ExistingRDD scan — r16 verdict #8). */
-  private[graft] def spanDepthFrame(base: DataFrame,
-                                    widths: Seq[Int]): DataFrame = {
     // ALL widths ride ONE tagged span stream (r16): shingleHashes
     // stays per-doc DISTINCT within each width, and the w tag keeps
     // widths separate under the shared key, so a count per (h, w)
@@ -870,6 +861,7 @@ object Dedup {
       .select(col("doc_id"), col("n_toks"),
               coalesce(col("depth"), lit(0)).as("depth"))
       .orderBy("doc_id")
+      .localCheckpoint()
   }
 
   /** q_span_depth: [[spanDepthProfile]] on the test corpus. */

@@ -21,6 +21,9 @@ import org.apache.spark.sql.graft.Shims
   *     each checkpoint is rebound back, so every DataFrame the loop body
   *     holds or returns belongs to the caller's session — whose conf is
   *     never written, so queries running beside the loop keep AQE.
+  *     Each loop action runs under the caller's job tags
+  *     ([[Shims.withTagsOf]]), so `interruptTag` and `interruptAll` on
+  *     the caller's session cancel a running loop.
   *     Setup (the edge/node checkpoints, which embed corpus-scale
   *     feeding queries) stays on the caller's session, so big one-off
   *     shuffles keep AQE's coalescing and skew handling. The width is
@@ -38,18 +41,20 @@ private[graft] final class Iterate private (loop: SparkSession,
                                             caller: SparkSession) {
 
   /** `df` materialized by one eager checkpoint job on the loop session. */
-  def checkpoint(df: DataFrame): DataFrame =
+  def checkpoint(df: DataFrame): DataFrame = Shims.withTagsOf(caller) {
     Iterate.rebind(caller, Iterate.rebind(loop, df).localCheckpoint())
+  }
 
   /** [[checkpoint]], with the aggregates `scalars` over `df` observed on
     * the same job: (checkpoint, one row of scalar values). */
-  def observed(df: DataFrame, scalars: Column*): (DataFrame, Row) = {
+  def observed(df: DataFrame, scalars: Column*): (DataFrame, Row) = Shims.withTagsOf(caller) {
     val (cp, row) = Iterate.observed(Iterate.rebind(loop, df), scalars)
     (Iterate.rebind(caller, cp), row)
   }
 
   /** `df` collected to the driver by a job on the loop session. */
-  def collect(df: DataFrame): Array[Row] = Iterate.rebind(loop, df).collect()
+  def collect(df: DataFrame): Array[Row] =
+    Shims.withTagsOf(caller)(Iterate.rebind(loop, df).collect())
 
   /** Runs `round(k)` for k = 1, 2, … until it returns true (converged)
     * or `cap` rounds ran; returns the number of rounds run. Reaching the

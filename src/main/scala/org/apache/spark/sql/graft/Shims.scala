@@ -1,12 +1,14 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.internal.SQLConf
 
 /** The `private[sql]` doorways a third-party plan-level extension
   * needs: wrapping a [[LogicalPlan]] into a public DataFrame of a
-  * given session, and deriving a private session from another. Same
+  * given session, deriving a private session from another, putting a
+  * session's job tags on jobs and draining the listener bus. Same
   * technique every open-source Spark extension with custom operators
   * uses (a shim object under `org.apache.spark.sql`); everything else
   * in graft sticks to public API.
@@ -42,4 +44,21 @@ object Shims {
     s.experimental.extraStrategies = caller.experimental.extraStrategies
     s
   }
+
+  /** Runs `body` with `spark`'s job tags on every job it starts: the
+    * session tag that `interruptAll()` cancels and the real tags of
+    * the thread's `addTag` tags that `interruptTag` cancels. A loop
+    * action runs on its loop session ([[loopSession]]), whose own tags
+    * differ from the caller's. Tags already set on the thread are left
+    * to whoever set them. */
+  def withTagsOf[T](spark: SparkSession)(body: => T): T = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sc = s.sparkContext
+    val tags = s.managedJobTags.get().values.toSet + s.sessionJobTag -- sc.getJobTags()
+    sc.addJobTags(tags)
+    try body finally sc.removeJobTags(tags)
+  }
+
+  /** Waits until the listener bus has delivered every posted event. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -4,12 +4,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -115,5 +117,45 @@ class IterateSpec extends AnyFunSuite {
     assert(runs.forall(_._1),
       s"${runs.count(!_._1)} of ${runs.size} q1 runs planned without AQE")
     assert(runs.forall(_._2 == serial))
+  }
+
+  test("loop jobs carry the caller's session tag and addTag tags") {
+    // the tags Spark itself puts on every caller-session job are the
+    // expected set: the session tag and the real tag of "t" (each
+    // execution also gets a tag of its own, dropped by the intersection)
+    val sc = spark.sparkContext
+    val marker = "graft.iterate.spec"
+    val seen = new ConcurrentLinkedQueue[(String, Set[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(marker) != null).foreach { p =>
+          val tags = Option(p.getProperty("spark.job.tags")).toSeq
+            .flatMap(_.split(",")).filter(_.nonEmpty).toSet
+          seen.add((p.getProperty(marker), tags))
+        }
+    }
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+      .toDF("src", "dst")
+    sc.addSparkListener(listener)
+    spark.addTag("t")
+    try {
+      sc.setLocalProperty(marker, "caller")
+      spark.range(1).count()
+      spark.range(2).count()
+      sc.setLocalProperty(marker, "loop")
+      Graft.pageRank(edges, iters = 3).collect()
+    } finally {
+      sc.setLocalProperty(marker, null)
+      spark.removeTag("t")
+      Shims.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    val (caller, loop) = seen.asScala.toSeq.partition(_._1 == "caller")
+    val expected = caller.map(_._2).reduce(_ intersect _)
+    assert(expected.size == 2 && expected.exists(_.endsWith("-t")), expected)
+    assert(loop.size > 3, s"only ${loop.size} pageRank jobs")
+    val missing = loop.map(_._2).filterNot(expected.subsetOf)
+    assert(missing.isEmpty,
+      s"${missing.size} of ${loop.size} pageRank jobs lack the caller's tags $expected: ${missing.headOption}")
   }
 }

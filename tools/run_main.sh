@@ -2,7 +2,7 @@
 # Run a graft main against the compiled classes + Spark jars without sbt.
 # Usage: tools/run_main.sh graft.Verify <args...>
 MAIN=$1; shift
-exec java -Xmx96g --add-opens=java.base/java.lang=ALL-UNNAMED \
+exec java -Xmx${SPARK_DRIVER_MEM:-8g} --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
   --add-opens=java.base/java.io=ALL-UNNAMED \
