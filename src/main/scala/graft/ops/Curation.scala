@@ -872,21 +872,21 @@ object Curation {
   /** Content-keyed WARC fixture directory: [[triadPages]] rendered
     * once per corpus fingerprint as real WARC response records
     * ([[graft.sources.Warc.writeWarc]]), 8 files. */
-  private val warcFixture = new IndexCache[String]("documents", { (s, d) =>
-    val p = java.nio.file.Files.createTempDirectory("graft-warc").toString
-    graft.sources.Warc.writeWarc(triadPages(s, d), p, 8)
-    p
-  })
+  private val warcFixture =
+    IndexCache.artifact[String]("documents", "graft-warc") { (s, d, p) =>
+      graft.sources.Warc.writeWarc(triadPages(s, d), p, 8)
+      p
+    }
 
   /** The `.warc.gz` twin of [[warcFixture]]: the SAME pages as
     * per-record gzip members (r15 — the framing real crawl dumps
     * ship in). */
-  private val warcGzFixture = new IndexCache[String]("documents", { (s, d) =>
-    val p = java.nio.file.Files.createTempDirectory("graft-warcgz").toString
-    graft.sources.Warc.writeWarc(triadPages(s, d), p, 8, gzip = true,
-                                 cdx = true)
-    p
-  })
+  private val warcGzFixture =
+    IndexCache.artifact[String]("documents", "graft-warcgz") { (s, d, p) =>
+      graft.sources.Warc.writeWarc(triadPages(s, d), p, 8, gzip = true,
+                                   cdx = true)
+      p
+    }
 
   /** q_warc_cdx (r15): RANGED POINT READS through the CDX sidecar —
     * a doc_id-sampled subset of the gzipped fixture's index rows is

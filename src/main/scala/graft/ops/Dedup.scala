@@ -101,14 +101,8 @@ object Dedup {
     * of the set-similarity index: re-encoded rarest-first token
     * arrays, partition-friendly, consumed by any threshold. */
   private val tokenSetTablePaths =
-    new IndexCache[String]("documents", { (s, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_token_sets").toString +
-        "/token_sets.parquet"
-      rankedTokenSets(Tables.docTokens(s, d))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    IndexCache.materializedParquet("documents", "graft_token_sets")(
+      (s, d) => rankedTokenSets(Tables.docTokens(s, d)))
 
   private[graft] def corpusTokenSets(spark: SparkSession,
                                      dir: String): DataFrame =
@@ -118,7 +112,7 @@ object Dedup {
     * the bare persist() relied on callers' clearCache — a long
     * session composing many distinct inputs leaked an entry each;
     * now repeated inputs reuse one entry and eviction unpersists). */
-  private val tokenSetPlans = new PlanCache(maxEntries = 4)
+  private val tokenSetPlans = new PlanCache("token_set_plans", maxEntries = 4)
 
   /** Shared front half of the set-similarity joins: per-doc SORTED
     * arrays of rarest-first vocabulary ranks,
@@ -127,9 +121,6 @@ object Dedup {
     * Used by [[jaccardVerified]] and [[containmentPairs]]. */
   private[graft] def rankedTokenSets(docToks: DataFrame): DataFrame =
     tokenSetPlans.get(docToks)(rankedTokenSetsPlan)
-
-  /** For lifecycle tests. */
-  private[graft] def tokenSetLiveEntries: Int = tokenSetPlans.liveEntryCount
 
   private def rankedTokenSetsPlan(docToks: DataFrame): DataFrame = {
     val spark = docToks.sparkSession
@@ -502,16 +493,13 @@ object Dedup {
     * presentation-only work the propagation never reads; the DuckDB
     * recursive-CTE oracle's closure is identical either way. */
   private val clusterTablePaths =
-    new IndexCache[(String, Int)]("documents", { (s, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_dedup_clusters").toString +
-        "/clusters.parquet"
+    IndexCache.artifact[(String, Int)]("documents", "graft_dedup_clusters") { (s, d, out) =>
       val (clusters, rounds) = clustersAndRounds(
         jaccardVerifiedFrom(corpusTokenSets(s, d), 0.9)
           .dropDuplicates("doc_a", "doc_b"))
-      clusters.write.mode("overwrite").parquet(p)
-      (p, rounds)
-    })
+      clusters.write.parquet(s"$out/clusters.parquet")
+      (s"$out/clusters.parquet", rounds)
+    }
 
   private[graft] def corpusClusters(spark: SparkSession,
                                     dir: String): DataFrame =
@@ -521,9 +509,6 @@ object Dedup {
   private[graft] def corpusClusterRounds(spark: SparkSession,
                                          dir: String): Int =
     clusterTablePaths.get(spark, dir)._2
-
-  private[graft] def clusterTableEntryCount: Int =
-    clusterTablePaths.entryCount
 
   /** [[qDedupCluster]]'s engine over ANY (doc_a, doc_b, ...) pair
     * DataFrame — jaccard pairs, MinHash pairs, embedding pairs all
@@ -975,9 +960,7 @@ object Dedup {
   }
 
   private val nearDupIndexPaths =
-    new IndexCache[String]("documents", { (spark, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_neardup_index").toString
+    IndexCache.artifact[String]("documents", "graft_neardup_index") { (spark, d, p) =>
       val docs = Tables.docTokens(spark, d)
         .select(col("doc_id"), shingleHashes(col("toks")).as("sh"))
         .filter(size(col("sh")) > 0)
@@ -992,7 +975,7 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$p/bands.parquet")
       docs.unpersist()
       p
-    })
+    }
 
   /** Materialized [[buildNearDupIndex]] for a corpus dir (the offline
     * index-build step; content-keyed — rebuilt iff the backing table
@@ -1006,7 +989,6 @@ object Dedup {
     (graft.Tables.loadPath(spark, s"$base/shingles.parquet"),
      graft.Tables.loadPath(spark, s"$base/bands.parquet"))
   }
-  private[graft] def nearDupIndexEntryCount: Int = nearDupIndexPaths.entryCount
 
   /** Incremental near-dup: an incoming (doc_id, toks) batch probed
     * against a corpus's materialized band index — the near-dup analog
@@ -1171,13 +1153,12 @@ object Dedup {
     * span=100. The refresh MUTATES this directory — safe because the
     * delta is idempotent (re-applying converges to the same corpus
     * and manifest), so re-runs of the query are deterministic. */
-  private val refreshFixture = new IndexCache[String]("documents", { (s, d) =>
-    val p = java.nio.file.Files
-      .createTempDirectory("graft_refresh_corpus").toString
-    graft.sources.Formats.writeShards(
-      Tables.documents(s, d).select(col("doc_id"), col("text")), p, 100L)
-    p
-  })
+  private val refreshFixture =
+    IndexCache.artifact[String]("documents", "graft_refresh_corpus") { (s, d, p) =>
+      graft.sources.Formats.writeShards(
+        Tables.documents(s, d).select(col("doc_id"), col("text")), p, 100L)
+      p
+    }
 
   /** q_corpus_refresh (r15, verdict ask #5): apply a CDC delta to a
     * corpus AT REST and re-emit ONLY the changed shards —

@@ -159,16 +159,9 @@ object Fuzzy {
     * quadratically with duplication. Content-keyed: mutating the
     * customer table re-fingerprints and rebuilds ([[IndexCache]]). */
   private val customerPairPaths =
-    new IndexCache[String]("customer", { (s, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_fuzzy_pairs").toString +
-        "/fuzzy_pairs.parquet"
+    IndexCache.materializedParquet("customer", "graft_fuzzy_pairs")((s, d) =>
       distinctFuzzyPairs(
-        Tables.customer(s, d).select(col("c_name").as("s")),
-        "s", maxDist = 1)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        Tables.customer(s, d).select(col("c_name").as("s")), "s", maxDist = 1))
 
   private[graft] def customerDistinctPairs(spark: SparkSession,
                                            dir: String): DataFrame =

@@ -299,7 +299,6 @@ object Graph {
       buildPageEdges)
   private[graft] def pageEdges(spark: SparkSession, dir: String): DataFrame =
     Tables.loadPath(spark, pageEdgePaths.get(spark, dir))
-  private[graft] def pageEdgeEntryCount: Int = pageEdgePaths.entryCount
 
   /** The matching pg/l/e oracle CTE block (no WITH) — the ONE SQL
     * derivation of the same page edges, shared by the q_page_rank /
@@ -602,7 +601,6 @@ object Graph {
       buildDomainEdges)
   private[graft] def domainEdges(spark: SparkSession, dir: String): DataFrame =
     Tables.loadPath(spark, domainEdgePaths.get(spark, dir))
-  private[graft] def domainEdgeEntryCount: Int = domainEdgePaths.entryCount
 
   /** The matching h/l/e oracle CTE block (no WITH keyword) — the ONE
     * SQL derivation of the same domain edges, shared by the

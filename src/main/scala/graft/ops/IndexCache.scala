@@ -2,52 +2,87 @@ package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Shims
 
 /** Content-keyed memo for per-corpus-dir derived artifacts (ANN
-  * posting tables, near-dup band indexes, corpus sizes).
+  * posting tables, near-dup band indexes, edge and cluster tables, PQ
+  * codebooks, corpus sizes).
   *
-  * The r6 review flagged the plain dir-keyed memos: correct for the
-  * immutable test dirs, but a library caller mutating a corpus under
-  * the same path silently got a stale index. The contract is now
-  * explicit: each `get` re-fingerprints the backing table (a recursive
-  * (path, length, mtime) listing — file metadata only, no data scan,
-  * the parquet-footer-metadata analog) and rebuilds iff it changed.
-  * Entries are REPLACED on change, so the map stays at one entry per
-  * dir no matter how long a tuning loop runs; a superseded on-disk
-  * artifact is left for JVM-exit temp cleanup (bounded by the number
-  * of corpus mutations, not calls).
+  * Each `get` re-fingerprints the backing table (a recursive (path,
+  * length, mtime) listing — file metadata only, no data scan) and
+  * rebuilds iff it changed, so a library caller mutating a corpus
+  * under the same path never reads a stale index. Entries are
+  * REPLACED on change: the map stays at one entry per dir no matter
+  * how long a tuning loop runs.
+  *
+  * An [[IndexCache.artifact]] cache is the only code that creates,
+  * replaces or deletes its artifact dirs. Every build writes into a
+  * fresh dir under `java.io.tmpdir`, and that dir is deleted
+  *  - when the build throws;
+  *  - when a changed fingerprint replaces the entry, once the new
+  *    build has succeeded;
+  *  - at JVM exit, for every dir still live.
   */
-private[graft] final class IndexCache[V](table: String,
-                                         build: (SparkSession, String) => V) {
-  private val entries = new ConcurrentHashMap[String, (String, V)]
+private[graft] final class IndexCache[V] private (
+    name: String, table: String, prefix: Option[String],
+    build: (SparkSession, String, String) => V) {
+  private final case class Entry(fingerprint: String, out: Option[java.io.File], value: V)
+  private val entries = new ConcurrentHashMap[String, Entry]
+  IndexCache.live.put(name, () => entries.size)
+
+  /** A cache that owns no files. */
+  def this(name: String, table: String, build: (SparkSession, String) => V) =
+    this(name, table, None, (s, d, _) => build(s, d))
 
   def get(spark: SparkSession, dir: String): V = {
     val k = IndexCache.fingerprint(spark, s"$dir/$table.parquet")
-    entries.compute(dir, (_, old) =>
-      if (old != null && old._1 == k) old else (k, build(spark, dir)))._2
+    var superseded: Option[java.io.File] = None
+    val e = entries.compute(dir, (_, old) =>
+      if (old != null && old.fingerprint == k) old
+      else {
+        val fresh = make(spark, dir, k)
+        superseded = Option(old).flatMap(_.out)
+        fresh
+      })
+    superseded.foreach(Shims.dropTempDir)
+    e.value
   }
 
-  /** For lifecycle tests: must stay flat across repeated `get`s. */
-  private[graft] def entryCount: Int = entries.size
+  private def make(spark: SparkSession, dir: String, k: String): Entry = {
+    val out = prefix.map(Shims.tempDir)
+    try Entry(k, out, build(spark, dir, out.map(_.toString).orNull))
+    catch { case t: Throwable => out.foreach(Shims.dropTempDir); throw t }
+  }
 }
 
 private[graft] object IndexCache {
-  /** Content-keyed MATERIALIZED parquet table: the build runs once per
-    * corpus fingerprint, lands in a fresh temp dir, and consumers read
-    * it back as a plain parquet scan — the shared shape behind the ANN
-    * posting / page-edge / domain-edge / cooc-pair tables (r13 review:
-    * the builder was copy-pasted four times). Returns the cache of
-    * PATHS; pair with a `spark.read.parquet(cache.get(...))` accessor. */
+  private[ops] val live = new ConcurrentHashMap[String, () => Int]
+
+  /** Read-only view for lifecycle tests: cache name (an artifact
+    * cache's dir prefix) -> live entry count, over every
+    * [[IndexCache]] and [[PlanCache]]. */
+  private[graft] def liveEntries: Map[String, Int] =
+    live.asScala.map { case (n, count) => n -> count() }.toMap
+
+  /** A cache whose every build gets its own fresh artifact dir `out`,
+    * named `prefix-<uuid>`; see the class doc for when it is deleted.
+    * `build(spark, dir, out)` writes under `out` and returns the
+    * value consumers read it through. */
+  private[graft] def artifact[V](table: String, prefix: String)
+      (build: (SparkSession, String, String) => V): IndexCache[V] =
+    new IndexCache[V](prefix, table, Some(prefix), build)
+
+  /** Content-keyed MATERIALIZED parquet table: `build`'s DataFrame
+    * written once per corpus fingerprint, consumed as a plain parquet
+    * scan of the returned path. */
   private[graft] def materializedParquet(table: String, prefix: String)
-      (build: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : IndexCache[String] =
-    new IndexCache[String](table, { (s, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory(prefix).toString + "/data.parquet"
-      build(s, d).write.mode("overwrite").parquet(p)
-      p
-    })
+      (build: (SparkSession, String) => DataFrame): IndexCache[String] =
+    artifact(table, prefix) { (s, d, out) =>
+      build(s, d).write.parquet(s"$out/data.parquet"); s"$out/data.parquet"
+    }
 
   /** Cheap content fingerprint of a file or directory tree. */
   private[graft] def fingerprint(spark: SparkSession, path: String): String = {
@@ -80,14 +115,14 @@ private[graft] object IndexCache {
   *    clearCache between queries — the Bench/Verify discipline) is
   *    re-persisted on the next get instead of silently running
   *    uncached forever. */
-private[graft] final class PlanCache(maxEntries: Int = 4) {
-  private case class Entry(input: org.apache.spark.sql.DataFrame,
-                           out: org.apache.spark.sql.DataFrame)
+private[graft] final class PlanCache(name: String, maxEntries: Int = 4) {
+  private case class Entry(input: DataFrame, out: DataFrame)
   private var entries = List.empty[Entry]
+  IndexCache.live.put(name, () => synchronized {
+    entries.count(_.out.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+  })
 
-  def get(input: org.apache.spark.sql.DataFrame)
-         (build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = synchronized {
+  def get(input: DataFrame)(build: DataFrame => DataFrame): DataFrame = synchronized {
     entries.find(_.input.sameSemantics(input)) match {
       case Some(e) =>
         entries = e :: entries.filterNot(_ eq e)
@@ -101,11 +136,5 @@ private[graft] final class PlanCache(maxEntries: Int = 4) {
         entries = entries.take(maxEntries)
         out
     }
-  }
-
-  /** For lifecycle tests. */
-  private[graft] def liveEntryCount: Int = synchronized {
-    entries.count(_.out.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
   }
 }

@@ -104,14 +104,14 @@ object Links {
   /** Content-keyed WAT fixture: the SAME link pages as [[qAnchorText]]
     * extracted and written as gzipped `metadata` records
     * ([[graft.sources.Warc.writeWat]]), 8 files. */
-  private val watFixture = new graft.ops.IndexCache[String]("documents", { (s, d) =>
-    val p = java.nio.file.Files.createTempDirectory("graft-wat").toString
-    val pages = Tables.documents(s, d)
-      .select(col("doc_id"), renderLinkPage.as("html"),
-              concat(lit("https://x.example/"), col("doc_id")).as("url"))
-    graft.sources.Warc.writeWat(pages, extractLinks(pages), p, 8, gzip = true)
-    p
-  })
+  private val watFixture =
+    IndexCache.artifact[String]("documents", "graft-wat") { (s, d, p) =>
+      val pages = Tables.documents(s, d)
+        .select(col("doc_id"), renderLinkPage.as("html"),
+                concat(lit("https://x.example/"), col("doc_id")).as("url"))
+      graft.sources.Warc.writeWat(pages, extractLinks(pages), p, 8, gzip = true)
+      p
+    }
 
   /** q_wat_links (r15): the identical anchor rollup fed THROUGH a WAT
     * round trip — the same link pages are extracted, rolled up to

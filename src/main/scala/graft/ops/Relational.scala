@@ -62,9 +62,7 @@ object Relational {
   }
 
   private val sourceRoundtripPaths =
-    new IndexCache[String]("documents", { (spark, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_source_rt").toString
+    IndexCache.artifact[String]("documents", "graft_source_rt") { (spark, d, p) =>
       val docs = Tables.documents(spark, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.write.mode("overwrite").option("header", "true")
@@ -74,7 +72,7 @@ object Relational {
         .csv(s"$p/docs_csv")
       docs.write.mode("overwrite").json(s"$p/docs_json")
       p
-    })
+    }
 
   /** q_partition_prune: the partitioned-sink + pruned-source pair —
     * the layout decision that matters most at 100 TB: documents are
@@ -95,14 +93,12 @@ object Relational {
   }
 
   private val partitionedDocsPaths =
-    new IndexCache[String]("documents", { (spark, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_part_docs").toString + "/docs"
+    IndexCache.artifact[String]("documents", "graft_part_docs") { (spark, d, out) =>
       Tables.documents(spark, d)
         .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-        .write.mode("overwrite").partitionBy("lang").parquet(p)
-      p
-    })
+        .write.partitionBy("lang").parquet(s"$out/docs")
+      s"$out/docs"
+    }
 
   /** q_filter_pred: compound predicate — AND/OR, BETWEEN, IN, LIKE,
     * null-safe equality — all pushable to the parquet scan. */

@@ -565,7 +565,7 @@ object Similarity {
     * a per-query job — r2's version re-ran the sizing `count()` scan on
     * every invocation. */
   private val corpusSizes =
-    new IndexCache[java.lang.Long]("embeddings",
+    new IndexCache[java.lang.Long]("corpus_sizes", "embeddings",
       (s, d) => Tables.embeddings(s, d).count())
   private[graft] def corpusSize(spark: SparkSession, dir: String): Long =
     corpusSizes.get(spark, dir)
@@ -721,7 +721,6 @@ object Similarity {
     graft.Tables.loadPath(spark, indexPaths.get(spark, dir))
   private[graft] def annIndexPath(spark: SparkSession, dir: String): String =
     indexPaths.get(spark, dir)
-  private[graft] def annIndexEntryCount: Int = indexPaths.entryCount
 
   /** Incremental ANN index APPEND (r15): posting rows (vec_id, vn,
     * tbl, bucket, pm) for NEW vectors under the corpus index's FROZEN

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Shims
 
 import graft.Tables
 
@@ -15,27 +16,16 @@ import graft.Tables
   */
 object Sql {
 
-  /** The most recent dir registered per session: every q_sql_* entry
-    * point calls [[registerTables]], and re-registering 9 views per
-    * query is measurable overhead inside the bench's timed region
-    * (tools/RegProbe) for work a catalog does once. Registration is
-    * skipped only when THIS dir is already the session's current
-    * registration; alternating dirs re-register correctly. */
-  private val lastRegistered =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
-  /** Registers all test tables as temp views (idempotent; no-op when
-    * `dir` is already the session's current registration). The dir is
-    * recorded AFTER all nine views exist (r17, ADVICE): recording it
-    * first meant a mid-loop load failure (missing/corrupt table) left
-    * the session claiming registration it never completed — every
-    * later q_sql_* would fail on missing views with no retry path. */
+  /** Registers all test tables of `dir` as temp views of `spark`.
+    * Every q_sql_* entry point calls this, so a view is re-registered
+    * only when the session's own catalog does not already hold it as
+    * the memoized [[Tables.load]] plan for `dir`: a view the caller
+    * replaced, or one of another dir, is registered again. */
   def registerTables(spark: SparkSession, dir: String): Unit =
-    if (lastRegistered.get(spark) != dir) {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings")
-        .foreach(t => Tables.load(spark, dir, t).createOrReplaceTempView(t))
-      lastRegistered.put(spark, dir)
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "documents", "embeddings").foreach { t =>
+      val df = Tables.load(spark, dir, t)
+      if (!Shims.isTempViewOf(spark, t, df)) df.createOrReplaceTempView(t)
     }
 
   /** TPC-H Q3 shape; `rnd` renders the engine's round-to-2 call. */

@@ -132,14 +132,8 @@ object TextAnalysis {
     * from raw text. At 100 TB this is the standing per-doc feature
     * table a curation run materializes once per crawl snapshot. */
   private val qualityStatsPaths =
-    new IndexCache[String]("documents", { (s, d) =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_quality_stats").toString +
-        "/quality_stats.parquet"
-      qualityStats(Tables.docTokens(s, d))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    IndexCache.materializedParquet("documents", "graft_quality_stats")(
+      (s, d) => qualityStats(Tables.docTokens(s, d)))
 
   private[graft] def corpusQualityStats(spark: SparkSession,
                                         dir: String): DataFrame =
@@ -848,7 +842,6 @@ object TextAnalysis {
       (s, d) => cooccurPairCounts(Tables.docTokens(s, d)))
   private[graft] def coocPairs(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.loadPath(spark, coocPairPaths.get(spark, dir))
-  private[graft] def coocPairEntryCount: Int = coocPairPaths.entryCount
 
   /** The thresholded co-occurrence pair table WITHOUT the top-N
     * report cut — the full (w1, w2, n_cooc) count relation, shared by

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Shims
 
 import graft.ops.{Quant, Similarity}
 
@@ -26,11 +27,13 @@ object PqTune {
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     println(f"${"B"}%4s ${"q"}%2s ${"R"}%4s ${"posts"}%9s ${"recall@3"}%9s ${"sec"}%7s")
     for (occ <- Seq(32L, 64L, 128L); q <- Seq(3, 4)) {
-      val idxDir = Quant.buildPqIndex(spark, dir, Quant.PqTables, q, occ)
+      val idxDir = Shims.tempDir("graft_pq_tune").toString
+      Quant.buildPqIndex(spark, dir, Quant.PqTables, q, occ, idxDir)
+      val cb = Quant.pqCodebookOf(spark, idxDir)
       val nPosts = spark.read.parquet(s"$idxDir/postings.parquet").count()
       for (r <- Seq(30, 50, 80)) {
         val t0 = System.nanoTime()
-        val ann = Quant.annPqFrom(spark, dir, idxDir, r).collect()
+        val ann = Quant.annPqFrom(spark, dir, idxDir, cb, r).collect()
         val sec = (System.nanoTime() - t0) / 1e9
         val aset = ann.map(x => (x.getLong(0), x.getLong(1))).toSet
         val recall = (knn & aset).size.toDouble / knn.size

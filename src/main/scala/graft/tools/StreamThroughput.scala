@@ -113,7 +113,7 @@ object StreamThroughput {
         val q = sink(EventStreams.trainingPipelineStream(
           ms.toDF().toDF("doc_id", "text", "ts")).toDF(), "st_train")
         var pendingDups = Seq.empty[(Long, String, Timestamp)]
-        val wall = replay(q, ms, docs.select("doc_id", "text").orderBy("doc_id"), batch) { chunk =>
+        val replayed = replay(q, ms, docs.select("doc_id", "text").orderBy("doc_id"), batch) { chunk =>
           val fresh = chunk.map(r => row(n => (r.getLong(0), r.getString(1), at((n + 1) * 10L))))
           // duplicates arrive a batch later, against settled state
           val b = fresh ++ pendingDups
@@ -122,6 +122,9 @@ object StreamThroughput {
             .map { case (id, t, _) => (id + 1000000L, t, at(rowsIn * 10L)) }
           b
         }
+        // the last chunk's duplicates arrive as one final batch
+        rowsIn += pendingDups.size
+        val wall = replayed + feed(q, ms, pendingDups)
         val shards = spark.table("st_train").select("shard").distinct().count()
         val (out, ops, stRows, stMb) = finish(q)
         report("TRAIN_STREAM", s"dir=$dir rows_in=$rowsIn rows_out=$out shards=$shards",
@@ -164,15 +167,15 @@ object StreamThroughput {
   /** Feeds `src` to `ms` in `batchRows`-row triggers, each chunk turned
     * into stream rows by `toBatch`; returns the processing seconds. */
   private def replay[T](q: StreamingQuery, ms: MemoryStream[T], src: DataFrame,
-                        batchRows: Int)(toBatch: Seq[Row] => Seq[T]): Double = {
-    var ns = 0L
-    src.toLocalIterator().asScala.grouped(batchRows).foreach { chunk =>
-      val rows = toBatch(chunk.toSeq)
-      val t0 = System.nanoTime()
-      ms.addData(rows); q.processAllAvailable()
-      ns += System.nanoTime() - t0
-    }
-    ns / 1e9
+                        batchRows: Int)(toBatch: Seq[Row] => Seq[T]): Double =
+    src.toLocalIterator().asScala.grouped(batchRows)
+      .map(chunk => feed(q, ms, toBatch(chunk.toSeq))).sum
+
+  /** Adds `rows` to `ms` as one trigger; returns its processing seconds. */
+  private def feed[T](q: StreamingQuery, ms: MemoryStream[T], rows: Seq[T]): Double = {
+    val t0 = System.nanoTime()
+    ms.addData(rows); q.processAllAvailable()
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Stops `q` after reading its sink's row count and its state

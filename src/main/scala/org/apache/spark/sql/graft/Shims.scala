@@ -8,7 +8,8 @@ import org.apache.spark.sql.internal.SQLConf
 /** The `private[sql]` doorways a third-party plan-level extension
   * needs: wrapping a [[LogicalPlan]] into a public DataFrame of a
   * given session, deriving a private session from another, putting a
-  * session's job tags on jobs and draining the listener bus. Same
+  * session's job tags on jobs, draining the listener bus and making
+  * temp dirs that Spark deletes at JVM exit. Same
   * technique every open-source Spark extension with custom operators
   * uses (a shim object under `org.apache.spark.sql`); everything else
   * in graft sticks to public API.
@@ -57,6 +58,24 @@ object Shims {
     val tags = s.managedJobTags.get().values.toSet + s.sessionJobTag -- sc.getJobTags()
     sc.addJobTags(tags)
     try body finally sc.removeJobTags(tags)
+  }
+
+  /** Whether temp view `name` of `spark` holds `df`'s own plan, as
+    * `df.createOrReplaceTempView(name)` stored it: one catalog lookup
+    * and a reference compare, no analysis. */
+  def isTempViewOf(spark: SparkSession, name: String, df: DataFrame): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
+      .getRawTempView(name)
+      .exists(_.plan.exists(_ eq df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan))
+
+  /** A fresh dir `prefix-<uuid>` under `java.io.tmpdir`, deleted at JVM exit. */
+  def tempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(System.getProperty("java.io.tmpdir"), prefix)
+
+  /** Deletes a [[tempDir]] now and takes it off the JVM-exit list. */
+  def dropTempDir(dir: java.io.File): Unit = {
+    org.apache.spark.util.ShutdownHookManager.removeShutdownDeleteDir(dir)
+    org.apache.spark.util.Utils.deleteRecursively(dir)
   }
 
   /** Waits until the listener bus has delivered every posted event. */

@@ -508,19 +508,29 @@ class GraftFacadeSpec extends AnyFunSuite {
     assert(hh.toSeq == Seq(("spark", 9L)))
   }
 
+  /** The live artifact dirs named `prefix-*` under `java.io.tmpdir`. */
+  private def artifactDirs(prefix: String): Set[java.io.File] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .filter(_.getName.startsWith(prefix + "-")).map(_.getCanonicalFile).toSet
+
   test("index caches: mutating the corpus under the same path rebuilds, entry count stays flat") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    import graft.ops.Dedup
+    import graft.ops.{Dedup, IndexCache}
     val tmp = Files.createTempDirectory("graft_idx_lifecycle").toString
     Files.copy(Paths.get(TestSpark.sf0001, "documents.parquet"),
                Paths.get(tmp, "documents.parquet"),
                StandardCopyOption.REPLACE_EXISTING)
-    val before = Dedup.nearDupIndexEntryCount
+    def entries = IndexCache.liveEntries("graft_neardup_index")
+    // the index dir a shingle table was read from: <dir>/shingles.parquet/part-*
+    def indexDir(sh: org.apache.spark.sql.DataFrame) =
+      new java.io.File(new java.net.URI(sh.inputFiles.head)).getParentFile.getParentFile
+    val before = entries
+    val ambient = artifactDirs("graft_neardup_index")
     val (sh1, _) = Dedup.nearDupIndex(spark, tmp)
     val full = sh1.count()
     // 20-call tuning loop on an unchanged corpus: no rebuild, no growth
     (1 to 20).foreach(_ => Dedup.nearDupIndex(spark, tmp))
-    assert(Dedup.nearDupIndexEntryCount == before + 1)
+    assert(entries == before + 1)
     // mutate the corpus in place: halve it and rewrite the same file
     val half = spark.read.parquet(s"$tmp/documents.parquet")
       .filter(col("doc_id") % 2 === 0)
@@ -533,20 +543,45 @@ class GraftFacadeSpec extends AnyFunSuite {
     // re-query: fresh index over the mutated corpus, still one entry
     val (sh2, _) = Dedup.nearDupIndex(spark, tmp)
     assert(sh2.count() < full)
-    assert(Dedup.nearDupIndexEntryCount == before + 1)
+    assert(entries == before + 1)
+    // the superseded index dir is deleted; this corpus owns one dir
+    assert(!indexDir(sh1).exists(), s"superseded ${indexDir(sh1)} still exists")
+    assert(artifactDirs("graft_neardup_index") -- ambient ==
+      Set(indexDir(sh2).getCanonicalFile))
+  }
+
+  test("index caches: a failed artifact build leaves no dir, the next get builds cleanly") {
+    import java.nio.file.{Files, Paths}
+    import graft.ops.IndexCache
+    val prefix = "graft_failing_build"
+    var fail = true
+    val cache = IndexCache.artifact[String]("documents", prefix) { (_, _, out) =>
+      Files.write(Paths.get(out, "part"), Array[Byte](1))
+      if (fail) throw new IllegalStateException("planted build failure")
+      out
+    }
+    intercept[IllegalStateException](cache.get(spark, TestSpark.sf0001))
+    assert(artifactDirs(prefix).isEmpty)
+    assert(IndexCache.liveEntries(prefix) == 0)
+    fail = false
+    val out = cache.get(spark, TestSpark.sf0001)
+    assert(Files.exists(Paths.get(out, "part")))
+    assert(artifactDirs(prefix) == Set(new java.io.File(out).getCanonicalFile))
+    assert(IndexCache.liveEntries(prefix) == 1)
   }
 
   test("cluster table: q_dedup_cluster and q_dedup_keep_best share one materialization") {
-    import graft.ops.Dedup
+    import graft.ops.{Dedup, IndexCache}
     val dir = TestSpark.sf0001
-    val before = Dedup.clusterTableEntryCount
+    def entries = IndexCache.liveEntries("graft_dedup_clusters")
+    val before = entries
     val clusters = Dedup.qDedupCluster(spark, dir).collect()
-    val built = Dedup.clusterTableEntryCount
+    val built = entries
     assert(built == before + 1 || (before > 0 && built == before))
     // the second consumer must reuse the materialized table (entry
     // count flat), and its clusters must be the same graph
     val kb = Dedup.qDedupKeepBest(spark, dir).collect()
-    assert(Dedup.clusterTableEntryCount == built, "keep_best rebuilt the cluster table")
+    assert(entries == built, "keep_best rebuilt the cluster table")
     assert(kb.map(_.getLong(0)).toSet ==
       clusters.map(_.getLong(1)).toSet, "same cluster ids from both consumers")
   }
@@ -677,20 +712,20 @@ class GraftFacadeSpec extends AnyFunSuite {
       (2L, s"alpha beta gamma delta $tag", "en"),
       (3L, "totally different tokens here", "en")
     ).toDF("doc_id", "text", "lang")
+    def live = graft.ops.IndexCache.liveEntries("token_set_plans")
     val a1 = Graft.jaccardPairs(corpus("a")).collect().map(_.toSeq).toSeq
-    val liveAfterFirst = graft.ops.Dedup.tokenSetLiveEntries
+    val liveAfterFirst = live
     val a2 = Graft.jaccardPairs(corpus("a")).collect().map(_.toSeq).toSeq
     assert(a1 == a2 && a1.nonEmpty) // docs 1,2 are verbatim dups
     // a REPEATED input must reuse its entry, not add one (other suite
     // tests may already hold ambient entries — compare relatively)
-    val liveAfterRepeat = graft.ops.Dedup.tokenSetLiveEntries
+    val liveAfterRepeat = live
     assert(liveAfterRepeat == liveAfterFirst,
       s"repeat grew the cache: $liveAfterFirst -> $liveAfterRepeat")
     // 8 distinct inputs: live entries stay at the LRU bound, and the
     // early input still returns the same rows after its eviction
     (0 until 8).foreach(i => Graft.containmentPairs(corpus(s"x$i")).collect())
-    assert(graft.ops.Dedup.tokenSetLiveEntries <= 4,
-      s"live entries: ${graft.ops.Dedup.tokenSetLiveEntries}")
+    assert(live <= 4, s"live entries: $live")
     val a3 = Graft.jaccardPairs(corpus("a")).collect().map(_.toSeq).toSeq
     assert(a3 == a1)
   }

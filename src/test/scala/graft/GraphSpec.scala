@@ -344,15 +344,17 @@ class GraphSpec extends AnyFunSuite {
     // prime all three tables for this dir BEFORE capturing the counts
     // (the first get legitimately builds)
     Graph.domainEdges(spark, dir); TextAnalysis.coocPairs(spark, dir)
-    val (p0, d0, c0) = (Graph.pageEdgeEntryCount,
-      Graph.domainEdgeEntryCount, TextAnalysis.coocPairEntryCount)
+    def counts = {
+      val live = graft.ops.IndexCache.liveEntries
+      (live("graft_page_edges"), live("graft_domain_edges"), live("graft_cooc_pairs"))
+    }
+    val (p0, d0, c0) = counts
     // a tuning loop over the same corpus: no growth
     (1 to 5).foreach { _ =>
       Graph.pageEdges(spark, dir); Graph.domainEdges(spark, dir)
       TextAnalysis.coocPairs(spark, dir)
     }
-    assert((Graph.pageEdgeEntryCount, Graph.domainEdgeEntryCount,
-            TextAnalysis.coocPairEntryCount) == ((p0, d0, c0)))
+    assert(counts == ((p0, d0, c0)))
     // a second corpus (a copy under a new path): exactly one more
     // entry per table, first corpus untouched
     val tmp = Files.createTempDirectory("graft_adj_lifecycle").toString
@@ -363,7 +365,6 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1)))
     Graph.domainEdges(spark, tmp); TextAnalysis.coocPairs(spark, tmp)
     assert(mat2.sorted.toSeq == mat.sorted.toSeq)
-    assert((Graph.pageEdgeEntryCount, Graph.domainEdgeEntryCount,
-            TextAnalysis.coocPairEntryCount) == ((p0 + 1, d0 + 1, c0 + 1)))
+    assert(counts == ((p0 + 1, d0 + 1, c0 + 1)))
   }
 }

@@ -34,6 +34,17 @@ class QueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"missing normative queries: $missing")
   }
 
+  test("q_sql_*: a view the caller replaced is registered again") {
+    val q3 = Queries.all("q_sql_q3")
+    val before = q3(spark, TestSpark.sf0001).collect().toSeq
+    assert(before.nonEmpty)
+    // the registered view holds the memoized load, so repeats skip it
+    assert(org.apache.spark.sql.graft.Shims.isTempViewOf(
+      spark, "orders", Tables.orders(spark, TestSpark.sf0001)))
+    spark.range(3).toDF("x").createOrReplaceTempView("orders")
+    assert(q3(spark, TestSpark.sf0001).collect().toSeq == before)
+  }
+
   for ((name, fn) <- Queries.all.toSeq.sortBy(_._1)) {
     test(s"$name returns rows on sf0.001") {
       assert(fn(spark, TestSpark.sf0001).count() > 0)
