@@ -13,18 +13,22 @@ import graft.{Queries, Tables}
   * Iteration shape (every loop in this file runs on the [[Iterate]]
   * skeleton: private loop session, eager per-round checkpoint,
   * observed convergence scalar, round cap): the edge list is
-  * repartitioned on src and localCheckpoint'ed ONCE; each of the
-  * fixed `iters` rounds is one hash shuffle (contribution sum grouped
-  * by dst) plus a 1-row dangling-mass aggregate that stays IN PLAN
-  * (cross-join of a scalar aggregate — no collect in the data path),
+  * hash-partitioned on src and localCheckpoint'ed ONCE on the loop
+  * session, which keeps its partitioning; each of the fixed `iters`
+  * rounds ([[Iterate.rounds]]: planned once, one job per round) is
+  * one hash shuffle (contribution sum grouped by dst) between two
+  * co-partitioned hash joins — no broadcast, so no broadcast job —
   * and ends in an EAGER checkpoint so the logical plan never grows
-  * with the round count. At 100 TB the per-round cost is one shuffle
-  * of the rank table keyed the same way every round.
+  * with the round count. The dangling mass is observed on that
+  * checkpoint's job and carried into the next round as a scalar (no
+  * collect in the data path, no 1-row aggregate job per round). At
+  * 100 TB the per-round cost is one shuffle of the rank table keyed
+  * the same way every round.
   *
   * EAGER, not lazy (r16): a LAZILY-checkpointed round table is first
-  * materialized inside the NEXT round's action, where AQE runs the
-  * broadcast stage (dangling-mass scalar) and the shuffle stage
-  * (contrib join) concurrently — both computing the same
+  * materialized inside the NEXT round's action, where AQE ran the
+  * broadcast stage (then the dangling-mass scalar) and the shuffle
+  * stage (contrib join) concurrently — both computing the same
   * un-materialized checkpoint. That race (a) double-computes the
   * round and (b) can deadlock outright: `RDD.doCheckpoint` takes
   * RDDCheckpointData$ then the RDD lock while
@@ -49,87 +53,101 @@ object Graph {
     * edges count once per occurrence): (node, pr) rounded to 6 dp,
     * ordered by node. Nodes = distinct src ∪ dst; nodes with no
     * out-edges are dangling and redistribute their mass uniformly. */
-  def pageRank(edgeDf: DataFrame, iters: Int = 10): DataFrame = {
-    val spark = edgeDf.sparkSession
+  def pageRank(edgeDf: DataFrame, iters: Int = 10): DataFrame =
+    pageRankState(edgeDf, iters)
+      .select(col("node"), round(col("r"), 6).as("pr")).orderBy("node")
+
+  /** [[pageRank]]'s last round state, unrounded: (node, dang, r). */
+  private[graft] def pageRankState(edgeDf: DataFrame, iters: Int): DataFrame = {
     // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
-    val outDeg0 = edgeDf.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(count(lit(1)).as("od"))
-    // out-degree is ITERATION-INVARIANT, so it is attached to the edge
-    // table ONCE here instead of re-joined inside every round (r16,
-    // guide §2.4: two operations keyed the same way share one
-    // exchange — ten od joins collapse into one). The division r/od
-    // stays per-edge with the same operands, so the arithmetic is
-    // bit-identical to the unrolled oracle.
-    val edges = edgeDf.select(col("src"), col("dst"))
-      .join(outDeg0, "src")
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
-    // nodes carry the (iteration-invariant) dangling flag — a node is
-    // dangling iff it never appears as a src. Folding the flag into
-    // the node table (and below into the rank table) replaces the
-    // per-round rank⋈danglingNodes join with a flag-filtered partial
-    // aggregate over rank itself (r16: one fewer exchange per round).
-    val nodes = edges.select(col("src").as("node"), lit(false).as("dang"))
+    Iterate(edgeDf.sparkSession, Tables.adaptiveParts(edgeDf)) { loop =>
+      val edges = degreeEdges(loop, edgeDf)
+      // graph SIZE rides the node table's checkpoint job: nc is bounded
+      // model state (one long, the dedupClusters convergence-scalar
+      // contract)
+      val (nodes, n) = loop.observed(danglingNodes(edges), count(lit(1)))
+      val nc = n.getLong(0)
+      // empty graph: the empty state instead of dividing the uniform
+      // init by zero (ANSI mode throws)
+      if (nc == 0) nodes.select(col("node"), col("dang"), lit(0.0).as("r"))
+      else {
+        val rank = loop.rounds(
+          nodes.select(col("node"), col("dang"), (lit(1.0) / lit(nc)).as("r")),
+          iters, danglingMass) { (rank, dm) =>
+          pageRankRound(nodes, edges, rank, nc, dm.head)
+        }
+        loop.release(edges, nodes)
+        rank
+      }
+    }
+  }
+
+  /** (src, dst, od): the edge list with each source's out-degree
+    * attached, checkpointed on the loop session partitioned on src.
+    * Out-degree is ITERATION-INVARIANT, so it is joined ONCE here
+    * instead of inside every round (r16, guide §2.4), and it is
+    * grouped on the src-partitioned edges themselves, so the setup is
+    * one shuffle. The division r/od stays per-edge with the same
+    * operands, so the arithmetic is bit-identical to the unrolled
+    * oracle. */
+  private def degreeEdges(loop: Iterate, edgeDf: DataFrame): DataFrame = {
+    val e = edgeDf.select(col("src"), col("dst"))
+    loop.checkpoint(e.join(
+      e.groupBy(col("src")).agg(count(lit(1)).as("od")).hint("shuffle_hash"), "src"))
+  }
+
+  /** (node, dang) for every node of `edges`, partitioned on node at the
+    * loop width: the iteration-invariant dangling flag (a node is
+    * dangling iff it never appears as a src) rides the node table, so
+    * the dangling mass is a flag-filtered aggregate over the rank table
+    * itself, not a per-round join (r16). */
+  private def danglingNodes(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"), lit(false).as("dang"))
       .union(edges.select(col("dst").as("node"), lit(true).as("dang")))
       .groupBy(col("node")).agg(min(col("dang")).as("dang"))
-      .repartition(nParts, col("node"))
-      .localCheckpoint()
-    // graph SIZE is computed ONCE outside the loop: nc is bounded
-    // model state (one long, the dedupClusters convergence-scalar
-    // contract)
-    val nc = nodes.count()
-    // empty graph: return the empty (node, pr) frame instead of
-    // dividing the uniform init by zero (ANSI mode throws)
-    if (nc == 0) return nodes.select(col("node"), lit(0.0).as("pr"))
-    // per-round EAGER checkpoint: a 2-round cadence was A/B'd and lost
-    // (ProfileOne: 5 fewer jobs but +620 ms of recomputed stage work —
-    // exchange reuse does not cover the round's final co-located join,
-    // which both next-round consumers then re-evaluate)
-    val rank = Iterate(spark, nParts) { loop =>
-      var r = loop.checkpoint(
-        nodes.select(col("node"), col("dang"), (lit(1.0) / lit(nc)).as("r")))
-      for (_ <- 1 to iters) r = loop.checkpoint(pageRankRound(nodes, edges, r, nc))
-      r
-    }
-    rank.select(col("node"), round(col("r"), 6).as("pr")).orderBy("node")
-  }
+
+  /** The rank mass on dangling nodes, observed on the job that
+    * checkpoints a rank table and carried into the next round: a
+    * DECIMAL sum, exact in any merge order (a double sum of observed
+    * partition buffers would depend on task-completion order). Null
+    * when no node dangles. */
+  private def danglingMass: Column =
+    sum(when(col("dang"), col("r").cast("decimal(38,30)")))
+
+  /** Sum of each node's in-edge contributions r/od: one equi-join of
+    * the src-partitioned edges with the node-partitioned rank table
+    * (co-partitioned at the loop width: hash-joined in place, no
+    * exchange and no broadcast) + a map-side-combined sum by dst. */
+  private def contributions(edges: DataFrame, rank: DataFrame): DataFrame =
+    edges
+      .join(rank.hint("shuffle_hash"), edges("src") === rank("node"))
+      .select(col("dst"), (col("r") / col("od")).as("c"))
+      .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
 
   /** One PageRank power-iteration round, factored out of [[pageRank]]
     * so its PLAN SHAPE is pinnable (PlanShapeSpec): the final plan of
     * the full query only shows checkpointed `ExistingRDD` scans, so a
-    * de-broadcast or cartesian regression inside the loop would
-    * otherwise be invisible to a plan assert. Shape contract: contrib
-    * is one equi-join + map-side-combined partial sum; the dangling
-    * mass is a 1-ROW aggregate riding a deliberate broadcast
-    * nested-loop cross (bounded — one row by construction); never a
+    * cartesian or broadcast regression inside the loop would otherwise
+    * be invisible to a plan assert. Shape contract: contrib is one
+    * equi-join + map-side-combined partial sum, joined back to the
+    * nodes by a co-partitioned equi-join; the dangling mass `dm` (the
+    * value [[danglingMass]] carried from the previous round) is a
+    * scalar in the projection — no nested-loop join, never a
     * CartesianProduct. */
   private[graft] def pageRankRound(nodes: DataFrame, edges: DataFrame,
-                                   rank: DataFrame, nc: Long): DataFrame = {
+                                   rank: DataFrame, nc: Long, dm: Column): DataFrame = {
     // lit(double), NOT expr("0.85"): Spark parses a bare decimal
     // literal as DECIMAL(2,2), which would silently run the whole
     // iteration in decimal arithmetic while DuckDB runs ::DOUBLE
     val d = lit(Damping.toDouble)
     val t = lit(Teleport.toDouble)
-    // `edges` arrives with the out-degree pre-attached (see
-    // [[pageRank]]): one equi-join + map-side-combined partial sum
-    val contrib = edges
-      .join(rank, edges("src") === rank("node"))
-      .select(col("dst"), (col("r") / col("od")).as("c"))
-      .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-    // dangling mass: flag-filtered partial aggregate over the rank
-    // table itself (rank carries the iteration-invariant `dang` flag)
-    // — no join; the filter keeps the summed term set identical to
-    // the old rank⋈danglingNodes form
-    val dangling = rank.where(col("dang"))
-      .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
+    val contrib = contributions(edges, rank)
     nodes
-      .join(contrib, nodes("node") === contrib("dst"), "left")
-      .crossJoin(broadcast(dangling))
+      .join(contrib.hint("shuffle_hash"), nodes("node") === contrib("dst"), "left")
       .select(col("node"), col("dang"),
               (t / lit(nc) +
                 d * (coalesce(col("contrib"), lit(0.0)) +
-                      col("dm") / lit(nc))).as("r"))
+                      coalesce(dm.cast("double"), lit(0.0)) / lit(nc))).as("r"))
   }
 
   /** Personalized PageRank: [[pageRank]] with the teleport vector
@@ -142,63 +160,44 @@ object Graph {
     * that separation is the point of personalization).
     *
     * Same iteration discipline and oracle story as [[pageRank]]:
-    * fixed rounds, edges/nodes/dangling checkpointed once, the
-    * dangling-mass scalar in-plan, per-round eager checkpoints; the
-    * seed flag is one broadcast semi-join at setup. `seeds` is a
-    * (node) DataFrame; ids absent from the graph are ignored. */
+    * fixed rounds, edges/nodes/dangling flags checkpointed once, the
+    * dangling mass carried from each round's checkpoint job into the
+    * next, one eager checkpoint job per round; the seed flag is one
+    * co-partitioned join at setup. `seeds` is a (node) DataFrame; ids
+    * absent from the graph are ignored. */
   def personalizedPageRank(edgeDf: DataFrame, seeds: DataFrame,
                            iters: Int = 10): DataFrame = {
-    val spark = edgeDf.sparkSession
-    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
-    val outDeg0 = edgeDf.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(count(lit(1)).as("od"))
-    // out-degree attached to the edge table ONCE (the r16 [[pageRank]]
-    // treatment): ten in-loop od joins collapse into one setup join;
-    // r/od operands unchanged, so the oracle arithmetic is identical
-    val edges = edgeDf.select(col("src"), col("dst"))
-      .join(outDeg0, "src")
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
-    val nodes0 = edges.select(col("src").as("node"), lit(false).as("dang"))
-      .union(edges.select(col("dst").as("node"), lit(true).as("dang")))
-      .groupBy(col("node")).agg(min(col("dang")).as("dang"))
-      .repartition(nParts, col("node"))
-    val seedSet = seeds.select(col("node")).distinct()
-    // nodes carry BOTH iteration-invariant flags: the seed indicator
-    // and the dangling flag (no out-edges) — the per-round dangling
-    // join becomes a flag-filtered aggregate over rank (r16)
-    val nodes = nodes0
-      .join(seedSet.select(col("node"), lit(1.0).as("is_seed")),
-            Seq("node"), "left")
-      .select(col("node"), col("dang"),
-              coalesce(col("is_seed"), lit(0.0)).as("is_seed"))
-      .localCheckpoint()
-    // |S| is bounded model state (one long), like pageRank's nc
-    val ns = nodes.where(col("is_seed") === 1.0).count()
-    if (ns == 0) return nodes.select(col("node"), lit(0.0).as("pr"))
-      .orderBy("node")
     val d = lit(Damping.toDouble)
     val t = lit(Teleport.toDouble)
-    val rank = Iterate(spark, nParts) { loop =>
-      var r0 = loop.checkpoint(nodes
-        .select(col("node"), col("dang"), col("is_seed"),
-                (col("is_seed") / lit(ns)).as("r")))
-      for (_ <- 1 to iters) {
-        val contrib = edges
-          .join(r0, edges("src") === r0("node"))
-          .select(col("dst"), (col("r") / col("od")).as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-        val dangling = r0.where(col("dang"))
-          .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
-        r0 = loop.checkpoint(nodes
-          .join(contrib, nodes("node") === contrib("dst"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(col("node"), col("dang"), col("is_seed"),
-                  ((t + d * col("dm")) * col("is_seed") / lit(ns) +
-                    d * coalesce(col("contrib"), lit(0.0))).as("r")))
+    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
+    val rank = Iterate(edgeDf.sparkSession, Tables.adaptiveParts(edgeDf)) { loop =>
+      val edges = degreeEdges(loop, edgeDf)
+      val seedSet = seeds.select(col("node")).distinct()
+        .select(col("node"), lit(1.0).as("is_seed"))
+      // nodes carry BOTH iteration-invariant flags: the seed indicator
+      // and the dangling flag; |S| is bounded model state (one long,
+      // like pageRank's nc) observed on the same job
+      val (nodes, s) = loop.observed(danglingNodes(edges)
+        .join(seedSet.hint("shuffle_hash"), Seq("node"), "left")
+        .select(col("node"), col("dang"),
+                coalesce(col("is_seed"), lit(0.0)).as("is_seed")),
+        count(when(col("is_seed") === 1.0, true)))
+      val ns = s.getLong(0)
+      if (ns == 0) nodes.select(col("node"), lit(0.0).as("r"))
+      else {
+        val rank = loop.rounds(nodes.select(col("node"), col("dang"), col("is_seed"),
+                                            (col("is_seed") / lit(ns)).as("r")),
+                               iters, danglingMass) { (r0, dm) =>
+          val contrib = contributions(edges, r0)
+          nodes
+            .join(contrib.hint("shuffle_hash"), nodes("node") === contrib("dst"), "left")
+            .select(col("node"), col("dang"), col("is_seed"),
+                    ((t + d * coalesce(dm.head.cast("double"), lit(0.0))) * col("is_seed") / lit(ns) +
+                      d * coalesce(col("contrib"), lit(0.0))).as("r"))
+        }
+        loop.release(edges, nodes)
+        rank
       }
-      r0
     }
     rank.select(col("node"), round(col("r"), 6).as("pr")).orderBy("node")
   }
@@ -322,106 +321,84 @@ object Graph {
   /** HITS hubs & authorities — the OTHER classic link-analysis
     * signal: authorities are pages linked BY good hubs, hubs are
     * pages linking TO good authorities (mutual recursion), computed
-    * by fixed power iterations with L1 normalization each round
+    * by fixed power iterations with L1 normalization at the end
     * (L1, not L2: the normalizer is then a plain sum, written
     * identically in the unrolled oracle, with no sqrt in the loop).
     * Same iteration discipline as [[pageRank]]: edges checkpointed
-    * once, two contribution shuffles per round (auth ← hubs over
-    * in-edges, hub ← auths over out-edges), normalizer scalars stay
-    * in-plan, eager per-round localCheckpoint on the hub table only
-    * (intermediate auth has a single consumer — see the loop note).
+    * once in both orientations, two contribution shuffles per round
+    * (auth ← hubs over in-edges, hub ← auths over out-edges), one
+    * checkpoint job per round on the hub table (the intermediate auth
+    * has a single consumer, this round's hub update; only the last
+    * round's auth, which the final join also reads, is checkpointed).
     * Returns (node, hub, auth) rounded 6 dp, ordered by node. */
   def hits(edgeDf: DataFrame, iters: Int = 10): DataFrame = {
-    val spark = edgeDf.sparkSession
     // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
     val nParts = Tables.adaptiveParts(edgeDf)
-    val edges = edgeDf.select(col("src"), col("dst"))
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
-    // SECOND copy of the adjacency partitioned on dst (r16, guide
-    // §2.4): the hub update joins edges on dst every round, and a
-    // src-partitioned edge table would be re-shuffled by dst ten
-    // times — the standard both-orientations adjacency layout. Same
-    // rows, so every join result (and the oracle) is unchanged.
-    val edgesByDst = edges
-      .repartition(nParts, col("dst"))
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .repartition(nParts, col("node"))
-      .localCheckpoint()
-    if (nodes.isEmpty)
-      return nodes.select(col("node"), lit(0.0).as("hub"), lit(0.0).as("auth"))
-    // SPARSE, UNNORMALIZED iteration: only nodes with out-edges ever
-    // hold hub mass and only nodes with in-edges hold authority mass
-    // (a zero score contributes exactly 0.0 to every sum), and power
-    // iteration is scale-invariant, so the L1 normalization happens
-    // ONCE at the end instead of per round — removing two scalar
-    // aggregates and their broadcasts from every round. Each round is
-    // exactly two join+sum shuffles. Magnitudes grow ~(fan²)^iters
-    // unnormalized, so every 5 rounds the hub vector is rescaled by
-    // 2^⌊log2(Σh)⌋ — the POWER-OF-TWO floor of the L1 norm, not the
-    // norm itself (r11 verdict #4, done exactly): dividing by a power
-    // of two only shifts exponents, so every subsequent sum is
-    // bit-for-bit the unnormalized iteration's value ×2^-K and the
-    // final normalized quotients h/Σh are UNCHANGED — the unrolled
-    // oracle needs no rescale CTEs, determinism never depends on
-    // distributed sum order (masses stay exact integer-dyadics within
-    // the 2^53 regime, exactly as before), and exponent overflow is
-    // impossible at any `iters` on any fan (the in-plan scalar resets
-    // magnitudes to ~[1, 2) each rescale). Dividing by the raw L1
-    // norm instead would make every mass a rounded quotient and every
-    // later sum order-dependent — a hash-nondeterminism bug, not a
-    // fix. Zeros are filled at presentation.
-    var hub = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("h"))
-      .localCheckpoint()
-    var auth = hub // placeholder; assigned in round 1
-    Iterate(spark, nParts) { loop =>
-    for (k <- 1 to iters) {
-      // auth is NOT checkpointed on intermediate rounds (r16): it has
-      // exactly ONE consumer (this round's hub update), so the hub
-      // checkpoint below already truncates lineage at depth two joins
-      // and there is no second consumer to double-compute — dropping
-      // it removes ~2 driver jobs per round from a query that is
-      // job-count-bound (ProfileOne: 85 jobs, 86 tasks, 1.2 s of task
-      // work in a 4 s wall). The LAST round's auth feeds two
-      // consumers (final join + its norm), so it alone checkpoints.
-      val authRaw = edges.join(hub, edges("src") === hub("node"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("a"))
-        .select(col("dst").as("node"), col("a"))
-      auth = if (k == iters) loop.checkpoint(authRaw) else authRaw
-      hub = loop.checkpoint(edgesByDst.join(auth, edgesByDst("dst") === auth("node"))
-        .groupBy(col("src")).agg(sum(col("a")).as("h"))
-        .select(col("src").as("node"), col("h")))
-      if (k % 5 == 0 && k < iters) {
-        val s = hub.agg(sum(col("h")).as("s"))
-        hub = loop.checkpoint(hub.crossJoin(broadcast(s))
+    Iterate(edgeDf.sparkSession, nParts) { loop =>
+      val edges = loop.checkpoint(edgeDf.select(col("src"), col("dst"))
+        .repartition(nParts, col("src")))
+      // SECOND copy of the adjacency partitioned on dst (r16, guide
+      // §2.4): the hub update joins edges on dst every round — the
+      // standard both-orientations adjacency layout. Same rows, so
+      // every join result (and the oracle) is unchanged.
+      val edgesByDst = loop.checkpoint(edges.repartition(nParts, col("dst")))
+      val (nodes, n) = loop.observed(edges.select(col("src").as("node"))
+        .union(edges.select(col("dst").as("node"))).distinct(), count(lit(1)))
+      // SPARSE, UNNORMALIZED iteration: only nodes with out-edges ever
+      // hold hub mass and only nodes with in-edges hold authority mass
+      // (a zero score contributes exactly 0.0 to every sum), and power
+      // iteration is scale-invariant, so the L1 normalization happens
+      // ONCE at the end. Magnitudes grow ~fan² per round unnormalized,
+      // so each round reads the hub vector divided by 2^⌊log2(max h)⌋,
+      // the max carried from the job that checkpointed it: dividing by
+      // a POWER OF TWO only shifts exponents (r11 verdict #4), so every
+      // sum is bit-for-bit the unnormalized iteration's value ×2^-K and
+      // the final quotients h/Σh are UNCHANGED — the unrolled oracle
+      // needs no rescale, determinism never depends on distributed sum
+      // order (masses stay exact integer-dyadics within the 2^53
+      // regime), and exponent overflow is impossible at any `iters` on
+      // any fan. The max is exact in any merge order; dividing by the
+      // raw L1 norm instead would make every mass a rounded quotient
+      // and every later sum order-dependent. Zeros are filled at
+      // presentation.
+      def authOf(hub: DataFrame, scale: Column): DataFrame =
+        edges.join(hub.hint("shuffle_hash"), edges("src") === hub("node"))
+          .groupBy(col("dst")).agg(sum(col("h") * scale).as("a"))
+          .select(col("dst").as("node"), col("a"))
+      def hubOf(auth: DataFrame): DataFrame =
+        edgesByDst.join(auth.hint("shuffle_hash"), edgesByDst("dst") === auth("node"))
+          .groupBy(col("src")).agg(sum(col("a")).as("h"))
+          .select(col("src").as("node"), col("h"))
+      if (n.getLong(0) == 0)
+        nodes.select(col("node"), lit(0.0).as("hub"), lit(0.0).as("auth"))
+      else {
+        val hub0 = edges.select(col("src").as("node")).distinct()
+          .select(col("node"), lit(1.0).as("h"))
+        val last = loop.rounds(hub0, iters - 1, max(col("h"))) { (hub, m) =>
+          hubOf(authOf(hub, when(m.head > 0d, pow(lit(2.0), -floor(log2(m.head))))
+                              .otherwise(lit(1.0))))
+        }
+        val auth = loop.checkpoint(authOf(last, lit(1.0)))
+        val hub = loop.checkpoint(hubOf(auth))
+        loop.release(edges, edgesByDst, last)
+        val hNorm = hub.agg(sum(col("h")).as("nh"))
+        val aNorm = auth.agg(sum(col("a")).as("na"))
+        nodes
+          .join(hub.withColumnRenamed("node", "hn"),
+                nodes("node") === col("hn"), "left")
+          .join(auth.withColumnRenamed("node", "an"),
+                nodes("node") === col("an"), "left")
+          .crossJoin(broadcast(hNorm))
+          .crossJoin(broadcast(aNorm))
           .select(col("node"),
-                  (col("h") / when(col("s") > 0d,
-                      pow(lit(2.0), floor(log(2.0, col("s")))))
-                    .otherwise(lit(1.0))).as("h")))
+                  round(when(col("nh") > 0d,
+                             coalesce(col("h"), lit(0.0)) / col("nh"))
+                          .otherwise(lit(0.0)), 6).as("hub"),
+                  round(when(col("na") > 0d,
+                             coalesce(col("a"), lit(0.0)) / col("na"))
+                          .otherwise(lit(0.0)), 6).as("auth"))
       }
-    }
-    }
-    val hNorm = hub.agg(sum(col("h")).as("nh"))
-    val aNorm = auth.agg(sum(col("a")).as("na"))
-    nodes
-      .join(hub.withColumnRenamed("node", "hn"),
-            nodes("node") === col("hn"), "left")
-      .join(auth.withColumnRenamed("node", "an"),
-            nodes("node") === col("an"), "left")
-      .crossJoin(broadcast(hNorm))
-      .crossJoin(broadcast(aNorm))
-      .select(col("node"),
-              round(when(col("nh") > 0d,
-                         coalesce(col("h"), lit(0.0)) / col("nh"))
-                      .otherwise(lit(0.0)), 6).as("hub"),
-              round(when(col("na") > 0d,
-                         coalesce(col("a"), lit(0.0)) / col("na"))
-                      .otherwise(lit(0.0)), 6).as("auth"))
-      .orderBy("node")
+    }.orderBy("node")
   }
 
   /** q_hits: [[hits]] over the extracted link fixture
@@ -540,25 +517,23 @@ object Graph {
     * eager per-round localCheckpoint truncates lineage, nothing to
     * the driver. */
   def labelPropagation(edgeDf: DataFrame, iters: Int = 5): DataFrame = {
-    val spark = edgeDf.sparkSession
     // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
     val nParts = Tables.adaptiveParts(edgeDf)
     val bid = edgeDf.select(col("src").as("a"), col("dst").as("b"))
       .union(edgeDf.select(col("dst").as("a"), col("src").as("b")))
-    // adjacency = both edge directions + one self-loop per node (the
-    // self-vote); partitioned on b because the per-round join is
-    // und.b = labels.node
-    val und = bid
-      .union(bid.select(col("a")).distinct()
-        .select(col("a"), col("a").as("b")))
-      .repartition(nParts, col("b"))
-      .localCheckpoint()
-    val labels = Iterate(spark, nParts) { loop =>
-      var lbls = loop.checkpoint(und.select(col("a").as("node")).distinct()
-        .repartition(nParts, col("node"))
-        .select(col("node"), col("node").as("lbl")))
-      for (_ <- 1 to iters) {
-        val freq = und.join(lbls, und("b") === lbls("node"))
+    val labels = Iterate(edgeDf.sparkSession, nParts) { loop =>
+      // adjacency = both edge directions + one self-loop per node (the
+      // self-vote); partitioned on b because the per-round join is
+      // und.b = labels.node
+      val und = loop.checkpoint(bid
+        .union(bid.select(col("a")).distinct()
+          .select(col("a"), col("a").as("b")))
+        .repartition(nParts, col("b")))
+      // every node starts with its own label (an aggregate, not an alias
+      // of the key, so the table stays partitioned on node)
+      val last = loop.rounds(bid.groupBy(col("a").as("node")).agg(min(col("a")).as("lbl")),
+                             iters) { (lbls, _) =>
+        val freq = und.join(lbls.hint("shuffle_hash"), und("b") === lbls("node"))
           .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("cnt"))
         // arg-max as a partial-aggregable min over (-cnt, lbl) structs
         // (r16): ≡ the former row_number window ordered (cnt DESC, lbl
@@ -569,10 +544,11 @@ object Graph {
           .groupBy(col("a"))
           .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("b"))
           .select(col("a").as("node"), col("b.lbl").as("newl"))
-        lbls = loop.checkpoint(lbls.join(top, Seq("node"), "left")
-          .select(col("node"), coalesce(col("newl"), col("lbl")).as("lbl")))
+        lbls.join(top.hint("shuffle_hash"), Seq("node"), "left")
+          .select(col("node"), coalesce(col("newl"), col("lbl")).as("lbl"))
       }
-      lbls
+      loop.release(und)
+      last
     }
     labels.select(col("node"), col("lbl").as("community")).orderBy("node")
   }

@@ -1,56 +1,73 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Expression, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.types.DataType
 
 /** The skeleton every iteration loop runs on: PageRank, PPR, HITS,
   * label propagation, BFS, SSSP, k-core, connected components, BPE
   * training and Lloyd. A loop is `Iterate(spark, width) { loop => … }`,
-  * and the helper owns the four things every loop repeats:
+  * and the helper owns the five things every loop repeats:
   *
   *  1. A private loop session ([[Shims.loopSession]]) with AQE off and
   *     `spark.sql.shuffle.partitions` pinned to the loop's width. Under
   *     AQE every exchange of every per-round checkpoint materializes as
-  *     its own driver job (~25-30 ms of scheduling floor each —
-  *     ProfileOne: q_page_rank ran 83 jobs for 86 tasks). Inside a loop
-  *     every exchange is an explicit `repartition(width, key)` or a
-  *     groupBy at the pinned width, so runtime coalescing has nothing
-  *     to do, and a round's checkpoint is one job. Only the loop's
-  *     ACTIONS run there: each is rebound onto the loop session, and
-  *     each checkpoint is rebound back, so every DataFrame the loop body
-  *     holds or returns belongs to the caller's session — whose conf is
-  *     never written, so queries running beside the loop keep AQE.
-  *     Each loop action runs under the caller's job tags
-  *     ([[Shims.withTagsOf]]), so `interruptTag` and `interruptAll` on
-  *     the caller's session cancel a running loop.
-  *     Setup (the edge/node checkpoints, which embed corpus-scale
-  *     feeding queries) stays on the caller's session, so big one-off
-  *     shuffles keep AQE's coalescing and skew handling. The width is
-  *     derived from data bytes or rows ([[graft.Tables.adaptiveParts]],
-  *     [[Iterate.sized]]), not from the local core count, so the regime
-  *     is the same decision at 100 TB; what a cluster loses is AQE's
-  *     in-loop skew-join splitting.
+  *     its own driver job (~25-30 ms of scheduling floor each), and a
+  *     checkpoint planned under AQE reports `UnknownPartitioning`, so a
+  *     table it produced is reshuffled by every join that reads it.
+  *     Inside a loop every exchange is an explicit `repartition(width,
+  *     key)` or a groupBy at the pinned width, so runtime coalescing
+  *     has nothing to do, a checkpoint is one job, and it keeps its
+  *     hash partitioning. Only the loop's ACTIONS run there: each is
+  *     rebound onto the loop session, and each checkpoint is rebound
+  *     back, so every DataFrame the loop body holds or returns belongs
+  *     to the caller's session — whose conf is never written, so
+  *     queries running beside the loop keep AQE. Each loop action runs
+  *     under the caller's job tags ([[Shims.withTagsOf]]), so
+  *     `interruptTag` and `interruptAll` on the caller's session cancel
+  *     a running loop. The width is derived from data bytes or rows
+  *     ([[graft.Tables.adaptiveParts]], [[Iterate.sized]]), not from the
+  *     local core count, so the regime is the same decision at 100 TB;
+  *     what a cluster loses is AQE's skew-join splitting inside the
+  *     loop and in the setup tables checkpointed on the loop session.
   *  2. The eager per-round checkpoint ([[checkpoint]]) — eager, not
   *     lazy: see the Graph.scala header.
   *  3. The convergence scalar, observed on that checkpoint's own job
   *     ([[observed]]) instead of a second one-row job.
   *  4. The round cap and the round count ([[fixpoint]]).
+  *  5. Fixed-round loops ([[rounds]]): the round is planned once, each
+  *     round is one checkpoint job, the scalars a round needs are
+  *     carried from the previous round's job, and a superseded round
+  *     state is released as soon as the next one has materialized.
   */
 private[graft] final class Iterate private (loop: SparkSession,
-                                            caller: SparkSession) {
+                                            caller: SparkSession, width: Int) {
 
   /** `df` materialized by one eager checkpoint job on the loop session. */
-  def checkpoint(df: DataFrame): DataFrame = Shims.withTagsOf(caller) {
-    Iterate.rebind(caller, Iterate.rebind(loop, df).localCheckpoint())
-  }
+  def checkpoint(df: DataFrame): DataFrame = observed(df)._1
 
   /** [[checkpoint]], with the aggregates `scalars` over `df` observed on
     * the same job: (checkpoint, one row of scalar values). */
   def observed(df: DataFrame, scalars: Column*): (DataFrame, Row) = Shims.withTagsOf(caller) {
-    val (cp, row) = Iterate.observed(Iterate.rebind(loop, df), scalars)
-    (Iterate.rebind(caller, cp), row)
+    val (cp, row) = run(planned(Iterate.observing(df, scalars)))
+    (Shims.ofRows(caller, cp), row)
   }
+
+  /** Drops the blocks of loop checkpoints nothing reads any more, such
+    * as a fixed-round loop's setup tables once its last round has
+    * materialized. */
+  def release(tables: DataFrame*): Unit =
+    tables.foreach(_.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => Shims.release(r.rdd)
+      case _ =>
+    })
 
   /** `df` collected to the driver by a job on the loop session. */
   def collect(df: DataFrame): Array[Row] =
@@ -75,6 +92,64 @@ private[graft] final class Iterate private (loop: SparkSession,
         s"no fixpoint after $cap rounds: the loop needs more rounds than its cap")
     k
   }
+
+  /** The state after `n` rounds of `round` from `init`, one checkpoint
+    * job per round. `round(state, carried)` maps a state to the next
+    * one with the same columns, partitioned the same way; `carried(i)`
+    * is the value of the aggregate `scalars(i)` over `state`, observed
+    * on the job that checkpointed `state` — a one-row aggregate joined
+    * into the round would cost a job of its own every round.
+    *
+    * `round` is called ONCE and its plan is analyzed, optimized and
+    * planned once: every round runs a fresh copy of that physical plan
+    * (exchanges cache their shuffle) over the last state's RDD, with
+    * the carried values swapped in. A carried value is a [[Carried]]
+    * leaf, not a literal: a literal is folded and inlined into the
+    * generated code, which would compile a new class every round.
+    * Scalars must be order-independent (a DECIMAL sum, a max): observed
+    * buffers merge in task-completion order. The state a round replaces
+    * is unpersisted once the round's checkpoint has materialized; the
+    * returned last state is the caller's. */
+  def rounds(init: DataFrame, n: Int, scalars: Column*)(
+      round: (DataFrame, Seq[Column]) => DataFrame): DataFrame = Shims.withTagsOf(caller) {
+    val (s0, row0) = run(planned(Iterate.observing(init, scalars)))
+    val slots = scalars.indices.map { i =>
+      Carried(i, CatalystTypeConverters.convertToCatalyst(row0.get(i)), row0.schema(i).dataType)
+    }
+    // the template reads every state column as nullable, so any state a
+    // round produces fits its leaf
+    val in = Shims.rescan(caller, s0, s0.output.map(_.withNullability(true)))
+    val out = Iterate.observing(round(Shims.ofRows(caller, in), slots.map(Shims.column)), scalars)
+    require(out.schema.map(_.dataType) == s0.schema.map(_.dataType),
+      s"a round must keep its state's columns: ${s0.schema.simpleString} -> ${out.schema.simpleString}")
+    val plan = planned(out)
+    require(width == 1 || Iterate.layout(plan.outputPartitioning, plan.output) ==
+                          Iterate.layout(s0.outputPartitioning, s0.output),
+      s"a round must keep its state's partitioning: ${s0.outputPartitioning} -> ${plan.outputPartitioning}")
+    var (state, row) = (s0, row0)
+    for (_ <- 1 to n) {
+      val (next, r) = run(plan.clone().transformUp {
+        case scan: RDDScanExec if scan.rdd eq s0.rdd => scan.copy(rdd = state.rdd)
+      }.transformAllExpressions {
+        case c: Carried => c.copy(value = CatalystTypeConverters.convertToCatalyst(row.get(c.slot)))
+      })
+      Shims.release(state.rdd)
+      state = next
+      row = r
+    }
+    Shims.ofRows(caller, state)
+  }
+
+  /** `df`'s physical plan on the loop session. */
+  private def planned(df: DataFrame): SparkPlan =
+    Iterate.rebind(loop, df).queryExecution.executedPlan
+
+  /** `plan` checkpointed by one job: (the checkpoint's scan, the row its
+    * [[Iterate.observing]] node observed, empty when it has none). */
+  private def run(plan: SparkPlan): (LogicalRDD, Row) = {
+    val cp = Shims.localCheckpoint(loop, plan)
+    (cp, plan.collectFirst { case m: CollectMetricsExec => m.collectedMetrics }.getOrElse(Row.empty))
+  }
 }
 
 private[graft] object Iterate {
@@ -83,7 +158,7 @@ private[graft] object Iterate {
   val RowsPerPart = 262144L
 
   def apply[T](spark: SparkSession, width: Int)(body: Iterate => T): T =
-    body(new Iterate(Shims.loopSession(spark, width), spark))
+    body(new Iterate(Shims.loopSession(spark, width), spark, width))
 
   /** A loop's input table, eagerly checkpointed on its own session and
     * sized from its MATERIALIZED row count (observed on the checkpoint's
@@ -97,20 +172,43 @@ private[graft] object Iterate {
   def sized(df: DataFrame, parts: Int, keys: Column*): (DataFrame, Long, Int) = {
     def part(d: DataFrame, n: Int): DataFrame =
       if (keys.isEmpty) d.repartition(n) else d.repartition(n, keys: _*)
-    val (t, r) = observed(part(df, parts), Seq(count(lit(1))))
-    val rows = r.getLong(0)
+    val o = observing(part(df, parts), Seq(count(lit(1))))
+    val t = o.localCheckpoint()
+    val rows = o.queryExecution.observedMetrics(Scalars).getLong(0)
     val width = math.max(1L, math.min(parts.toLong, rows / RowsPerPart + 1L)).toInt
     (if (width < parts) part(t, width).localCheckpoint() else t, rows, width)
   }
 
-  private def observed(df: DataFrame, scalars: Seq[Column]): (DataFrame, Row) = {
-    val o = Observation()
-    val named = scalars.indices.map(i => scalars(i).as(s"s$i"))
-    val cp = df.observe(o, named.head, named.tail: _*).localCheckpoint()
-    val m = o.get
-    (cp, Row.fromSeq(scalars.indices.map(i => m(s"s$i"))))
+  /** The observation name of a loop checkpoint's scalars. */
+  private val Scalars = "graft_loop_scalars"
+
+  /** `df` with `scalars` observed under [[Scalars]] (`df` itself when none). */
+  private def observing(df: DataFrame, scalars: Seq[Column]): DataFrame =
+    if (scalars.isEmpty) df
+    else {
+      val named = scalars.indices.map(i => scalars(i).as(s"s$i"))
+      df.observe(Scalars, named.head, named.tail: _*)
+    }
+
+  /** `p` over the positions of `output`, not its attributes. */
+  private def layout(p: Partitioning, output: Seq[Attribute]): Partitioning = p match {
+    case e: Expression => e.transform { case a: Attribute =>
+      BoundReference(output.indexWhere(_.exprId == a.exprId), a.dataType, nullable = true)
+    }.asInstanceOf[Partitioning]
+    case p => p
   }
 
   private def rebind(spark: SparkSession, df: DataFrame): DataFrame =
     Shims.ofRows(spark, df.queryExecution.analyzed)
+}
+
+/** A scalar a fixed-round loop carries into a round ([[Iterate.rounds]]):
+  * `value` as a leaf that is neither folded nor inlined, so every round
+  * generates the same code whatever its value. Always nullable: the
+  * template is analyzed once, with the first round's value. */
+private[graft] case class Carried(slot: Int, value: Any, dataType: DataType)
+    extends LeafExpression with CodegenFallback {
+  override def foldable: Boolean = false
+  override def nullable: Boolean = true
+  override def eval(input: InternalRow): Any = value
 }

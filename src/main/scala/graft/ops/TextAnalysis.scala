@@ -288,10 +288,20 @@ object TextAnalysis {
         expr(s"cast(((rank - 1) * $tiers) div ${n}L + 1 as int)"))
       .groupBy("tier")
       .agg(count(lit(1)).as("n_docs"),
-           round(avg(col("quality")), 6).as("avg_q"),
+           mean6(col("quality")).as("avg_q"),
            min(col("quality")).as("min_q"),
            max(col("quality")).as("max_q"))
       .orderBy("tier")
+  }
+
+  /** The mean of 6-dp values `c`, rounded half up to 6 dp, exactly: the
+    * values summed as integer millionths in DECIMAL (order-independent)
+    * and divided once, in integers. A double `avg` sums in task order,
+    * which can move a mean across the rounding boundary. */
+  private def mean6(c: Column): Column = {
+    val twice = sum(round(c * 1e6).cast("decimal(38,0)")) * 2 + count(c) // 2S + n
+    val den = count(c) * 2
+    ((twice - twice % den) / den).cast("double") / 1e6
   }
 
   /** q_quality_tiers: [[qualityTiers]] quartiles on the test corpus
@@ -910,7 +920,7 @@ object TextAnalysis {
            countDistinct(col("lang")).as("n_langs"),
            sum(col("n_toks")).as("total_toks"),
            round(avg(col("n_toks")), 6).as("avg_toks"),
-           round(avg(col("quality")), 6).as("avg_quality"))
+           mean6(col("quality")).as("avg_quality"))
       .orderBy("source")
   }
 

@@ -1,13 +1,18 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
 import org.apache.spark.sql.internal.SQLConf
 
 /** The `private[sql]` doorways a third-party plan-level extension
   * needs: wrapping a [[LogicalPlan]] into a public DataFrame of a
-  * given session, deriving a private session from another, putting a
+  * given session, an expression into a Column and a physical plan into
+  * a checkpoint, deriving a private session from another, putting a
   * session's job tags on jobs, draining the listener bus and making
   * temp dirs that Spark deletes at JVM exit. Same
   * technique every open-source Spark extension with custom operators
@@ -18,6 +23,45 @@ object Shims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The rows of checkpoint scan `r` under the attributes `attrs` (same
+    * types, by position) on `spark`; its partitioning and ordering follow
+    * the attributes by id. No size estimate or constraints carry over. */
+  def rescan(spark: SparkSession, r: LogicalRDD, attrs: Seq[Attribute]): LogicalRDD = {
+    val m = AttributeMap(r.output.zip(attrs))
+    def re(e: Expression): Expression = e.transform { case a: Attribute => m.getOrElse(a, a) }
+    LogicalRDD(attrs, r.rdd,
+      r.outputPartitioning match {
+        case p: Expression => re(p).asInstanceOf[Partitioning]
+        case p => p
+      },
+      r.outputOrdering.map(re(_).asInstanceOf[SortOrder]), r.isStreaming)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+  }
+
+  /** `plan` run under `spark`'s SQL conf and eagerly checkpointed by one
+    * job, as `Dataset.localCheckpoint` does: the checkpoint as a scan,
+    * whose size estimate is its counted rows. */
+  def localCheckpoint(spark: SparkSession, plan: SparkPlan): LogicalRDD = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    s.withActive(SQLExecution.withSQLConfPropagated(s) {
+      val rdd = plan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      val rows = rdd.count()
+      val stats = Statistics(EstimationUtils.getSizePerRow(plan.output) * rows, Some(rows))
+      LogicalRDD(plan.output, rdd, plan.outputPartitioning, plan.outputOrdering,
+        isStreaming = false)(s, Some(stats))
+    })
+  }
+
+  /** Drops the blocks of a checkpoint RDD nothing reads any more
+    * (`RDD.unpersist` would warn that a local checkpoint cannot be
+    * recomputed). */
+  def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** A Catalyst expression as a Column. */
+  def column(e: Expression): Column = org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
   /** A private session for one iteration loop ([[graft.ops.Iterate]]):
     * a new session on the same SparkContext and cache, carrying a copy

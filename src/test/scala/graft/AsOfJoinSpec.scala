@@ -166,9 +166,8 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("bucketed-at-rest children: native as-of plans with ZERO shuffles") {
-    import java.nio.file.Files
     import graft.sources.Formats
-    val dir = Files.createTempDirectory("graft_asof_bucketed").toString
+    val dir = TestSpark.tempDir("graft_asof_bucketed").toString
     val ev = Tables.events(spark, TestSpark.sf0001)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select("event_id", "user_id", "ts")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,7 +54,7 @@ class GoldenSpec extends AnyFunSuite {
   /** Planted near-duplicates: base docs + copies with one token changed
     * (+ optionally an exact duplicate of doc 0 as id 999999). */
   private def plantedDir(withExactDup: Boolean = false): String = {
-    val dir = Files.createTempDirectory("graft_planted").toString
+    val dir = TestSpark.tempDir("graft_planted").toString
     val base = Tables.documents(spark, TestSpark.sf0001)
       .filter(col("doc_id") < 40).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))

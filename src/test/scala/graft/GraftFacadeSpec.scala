@@ -516,7 +516,7 @@ class GraftFacadeSpec extends AnyFunSuite {
   test("index caches: mutating the corpus under the same path rebuilds, entry count stays flat") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import graft.ops.{Dedup, IndexCache}
-    val tmp = Files.createTempDirectory("graft_idx_lifecycle").toString
+    val tmp = TestSpark.tempDir("graft_idx_lifecycle").toString
     Files.copy(Paths.get(TestSpark.sf0001, "documents.parquet"),
                Paths.get(tmp, "documents.parquet"),
                StandardCopyOption.REPLACE_EXISTING)
@@ -534,7 +534,7 @@ class GraftFacadeSpec extends AnyFunSuite {
     // mutate the corpus in place: halve it and rewrite the same file
     val half = spark.read.parquet(s"$tmp/documents.parquet")
       .filter(col("doc_id") % 2 === 0)
-    val stage = Files.createTempDirectory("graft_idx_stage").toString
+    val stage = TestSpark.tempDir("graft_idx_stage").toString
     half.coalesce(1).write.mode("overwrite").parquet(stage)
     val part = Files.list(Paths.get(stage)).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
@@ -763,7 +763,7 @@ class GraftFacadeSpec extends AnyFunSuite {
       Seq((99L, Seq("x", "y", "z", "w", "v"))).toDF("doc_id", "toks"))
     assert(accSh.count() == 1 && accBands.count() > 0)
     // shard write + refresh round trip through the facade
-    val dir = java.nio.file.Files.createTempDirectory("graft_facade_refresh").toString
+    val dir = TestSpark.tempDir("graft_facade_refresh").toString
     Graft.writeShards(Seq((1L, "one doc"), (250L, "two doc")).toDF("doc_id", "text"),
       dir, 100L)
     val m = Graft.refreshShards(dir,

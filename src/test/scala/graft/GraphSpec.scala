@@ -30,6 +30,27 @@ class GraphSpec extends AnyFunSuite {
       s"sum=${r.values.sum}")
   }
 
+  test("pageRank: dangling mass spread over partitions gives bit-identical reruns") {
+    // 600 nodes, most multiples of 3 dangling (no out-edges), hashed over
+    // the loop's partitions. The dangling mass is observed on each
+    // round's checkpoint job, whose partition buffers merge in
+    // task-completion order: only an exact carrier makes the unrounded
+    // ranks repeat bit for bit.
+    val es = (0 until 600).filter(_ % 3 != 0).flatMap { i =>
+      Seq(s"n$i" -> s"n${(i * 7 + 1) % 600}", s"n$i" -> s"n${(i * 13 + 5) % 600}")
+    }.toDF("src", "dst")
+    // a size estimate over 64 MB widens the loop (adaptiveParts): the
+    // cross join with a one-row range multiplies the estimate, not the rows
+    val edges = es.crossJoin(spark.range(0, 100000, 1, 1).where(col("id") < 1)).drop("id")
+    val width = Tables.adaptiveParts(edges)
+    assert(width > 1, s"width $width")
+    def run() = Graph.pageRankState(edges, 10).orderBy("node").collect()
+      .map(r => (r.getString(0), r.getBoolean(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+    val (a, b) = (run(), run())
+    assert(a.count(_._2) > 100, s"${a.count(_._2)} dangling nodes")
+    assert(a.sameElements(b))
+  }
+
   test("sink of a chain outranks its sources; dangling-only graph is uniform") {
     val chain = ranks(Seq("a" -> "b", "b" -> "c"))
     assert(chain("c") > chain("b") && chain("b") > chain("a"))
@@ -357,7 +378,7 @@ class GraphSpec extends AnyFunSuite {
     assert(counts == ((p0, d0, c0)))
     // a second corpus (a copy under a new path): exactly one more
     // entry per table, first corpus untouched
-    val tmp = Files.createTempDirectory("graft_adj_lifecycle").toString
+    val tmp = TestSpark.tempDir("graft_adj_lifecycle").toString
     Files.copy(Paths.get(dir, "documents.parquet"),
                Paths.get(tmp, "documents.parquet"),
                StandardCopyOption.REPLACE_EXISTING)

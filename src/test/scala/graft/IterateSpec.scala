@@ -4,8 +4,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
@@ -92,6 +93,66 @@ class IterateSpec extends AnyFunSuite {
       assert(parts.contains(3), parts)
       assert((spark.conf.get(Aqe), spark.conf.get(Width)) == caller)
     }
+  }
+
+  private val graph = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d", "e" -> "d", "b" -> "e")
+
+  /** Jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Shims.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try body finally {
+      Shims.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("fixed-round loops: the setup jobs plus one job per round") {
+    val edges = graph.toDF("src", "dst")
+    // pageRank's setup: the edge table, the node table (its count rides
+    // the same job) and the initial ranks; labelPropagation's: the
+    // adjacency and the initial labels. Each round is its checkpoint job.
+    for (iters <- Seq(2, 6)) {
+      val pr = jobsOf(Graph.pageRank(edges, iters))
+      assert(pr <= 3 + iters, s"pageRank($iters): $pr jobs")
+      val lp = jobsOf(Graph.labelPropagation(edges, iters))
+      assert(lp <= 2 + iters, s"labelPropagation($iters): $lp jobs")
+    }
+  }
+
+  test("fixed-round loops: rounds 2..n compile no new code") {
+    val edges = graph.toDF("src", "dst")
+    // a one-round run compiles the setup and the round; rounds 2..6 run
+    // the same code with other carried dangling masses, which a literal
+    // would have inlined into a new class each round
+    Graph.pageRank(edges, iters = 1)
+    Graph.labelPropagation(edges, iters = 1)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Graph.pageRank(edges, iters = 6)
+    Graph.labelPropagation(edges, iters = 6)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+  }
+
+  test("fixed-round loops release each superseded round state") {
+    val sc = spark.sparkContext
+    val edges = graph.toDF("src", "dst")
+    def held(body: => DataFrame): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = body
+      val grown = (sc.getPersistentRDDs.keySet -- before).size
+      out.collect()
+      grown
+    }
+    // each keeps only its final state: not its setup tables (edges and
+    // nodes, the adjacency), the initial state or the 9 intermediate ones
+    assert(held(Graph.pageRank(edges, iters = 10)) <= 1)
+    assert(held(Graph.labelPropagation(edges, iters = 10)) <= 1)
   }
 
   test("concurrent: TPC-H q1 beside a running pageRank keeps AQE and its serial result") {

@@ -80,7 +80,7 @@ class NGramSpec extends AnyFunSuite {
     * sink receives zero rows. Here: a parquet write of the strict plan
     * throws, and the output dir holds no committed part files. */
   test("strict run fails end-to-end, sink stays empty (NGramTransformTest.java:201-219)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_strict_sink").toString
+    val dir = TestSpark.tempDir("graft_strict_sink").toString
     val df = tokensDf(Seq(Seq("Less")))  // the reference's 1-token row vs n=3
     intercept[Exception] {
       Text.ngramOverTokens(df, "tokens", 3, "ngrams", strict = true)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.sql.functions.col
@@ -81,7 +80,7 @@ class NGramTransformerSpec extends AnyFunSuite {
   }
 
   test("save/load round-trips the configured stage") {
-    val dir = Files.createTempDirectory("graft_ngram_stage").toString + "/st"
+    val dir = TestSpark.tempDir("graft_ngram_stage").toString + "/st"
     new NGramTransformer().setInputCol("tokens").setN(3).setStrict(false)
       .setOutputCol("g3").save(dir)
     val back = NGramTransformer.load(dir)

@@ -19,7 +19,7 @@ class SourcesSpec extends AnyFunSuite {
     val li = Tables.lineitem(spark, TestSpark.sf0001)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
               "l_returnflag")
-    val dir = Files.createTempDirectory("graft_csv").toString + "/li"
+    val dir = TestSpark.tempDir("graft_csv").toString + "/li"
     Formats.writeCsv(li, dir)
     val back = Formats.readCsv(spark, dir, li.schema)
     assert(checksum(back) == checksum(li))
@@ -28,7 +28,7 @@ class SourcesSpec extends AnyFunSuite {
   test("json round-trip preserves rows and sums") {
     val li = Tables.lineitem(spark, TestSpark.sf0001)
       .select("l_orderkey", "l_quantity", "l_extendedprice")
-    val dir = Files.createTempDirectory("graft_json").toString + "/li"
+    val dir = TestSpark.tempDir("graft_json").toString + "/li"
     Formats.writeJson(li, dir)
     val back = Formats.readJson(spark, dir, li.schema)
     assert(checksum(back) == checksum(li))
@@ -37,7 +37,7 @@ class SourcesSpec extends AnyFunSuite {
   test("xml round-trip preserves rows and sums (Spark 4 built-in source)") {
     val li = Tables.lineitem(spark, TestSpark.sf0001)
       .select("l_orderkey", "l_quantity", "l_extendedprice")
-    val dir = Files.createTempDirectory("graft_xml").toString + "/li"
+    val dir = TestSpark.tempDir("graft_xml").toString + "/li"
     Formats.writeXml(li, dir)
     val back = Formats.readXml(spark, dir, li.schema)
     assert(checksum(back) == checksum(li))
@@ -46,7 +46,7 @@ class SourcesSpec extends AnyFunSuite {
   test("orc round-trip preserves rows and sums, with predicate pushdown") {
     val li = Tables.lineitem(spark, TestSpark.sf0001)
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-    val dir = Files.createTempDirectory("graft_orc").toString + "/li"
+    val dir = TestSpark.tempDir("graft_orc").toString + "/li"
     Formats.writeOrc(li, dir)
     val back = Formats.readOrc(spark, dir)
     assert(checksum(back) == checksum(li))
@@ -59,7 +59,7 @@ class SourcesSpec extends AnyFunSuite {
   test("partitioned parquet write prunes partitions on read") {
     val li = Tables.lineitem(spark, TestSpark.sf0001)
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-    val dir = Files.createTempDirectory("graft_part").toString + "/li"
+    val dir = TestSpark.tempDir("graft_part").toString + "/li"
     Formats.writePartitioned(li, dir, "l_returnflag")
     val filtered = spark.read.parquet(dir).filter(col("l_returnflag") === "A")
     // behavior: only the A partition is read
@@ -74,7 +74,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("bucketed tables: repeated join plans with no shuffle exchange") {
-    val dir = Files.createTempDirectory("graft_bucketed").toString
+    val dir = TestSpark.tempDir("graft_bucketed").toString
     val orders = Tables.orders(spark, TestSpark.sf0001)
     val customer = Tables.customer(spark, TestSpark.sf0001)
     // the write pays the shuffle once; both sides co-bucketed on the key
@@ -107,7 +107,7 @@ class SourcesSpec extends AnyFunSuite {
     // join re-shuffles ONLY the (small, per-query) probe stream, never
     // the index
     import graft.ops.Similarity
-    val dir = Files.createTempDirectory("graft_postings").toString
+    val dir = TestSpark.tempDir("graft_postings").toString
     val postings = Similarity.annPostings(spark, TestSpark.sf0001)
     Formats.writeBucketed(postings.select("tbl", "bucket", "vec_id", "vn"),
                           "postings_b", s"$dir/postings", 8, "tbl", "bucket")
@@ -132,7 +132,7 @@ class SourcesSpec extends AnyFunSuite {
   test("writeShards: bounded sorted shards, exact manifest, byte-stable rerun") {
     import graft.sources.Formats
     val docs = Tables.documents(spark, TestSpark.sf0001)
-    val dir = Files.createTempDirectory("graft_shards").toString
+    val dir = TestSpark.tempDir("graft_shards").toString
     val manifest = Formats.writeShards(docs, dir, shardSpan = 100)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -148,7 +148,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(back == manifest.map { case (s, (n, _, _, _)) => s -> n })
     assert(back.values.sum == docs.count())
     // deterministic: a rerun produces the identical manifest
-    val dir2 = Files.createTempDirectory("graft_shards2").toString
+    val dir2 = TestSpark.tempDir("graft_shards2").toString
     val manifest2 = Formats.writeShards(docs, dir2, shardSpan = 100)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -157,7 +157,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("text round-trip: one line per doc, order-insensitive content equal") {
     val docs = Tables.documents(spark, TestSpark.sf0001).select(col("text"))
-    val dir = Files.createTempDirectory("graft_text").toString + "/docs"
+    val dir = TestSpark.tempDir("graft_text").toString + "/docs"
     Formats.writeText(docs, dir)
     val back = Formats.readText(spark, dir)
     assert(back.count() == docs.count())
@@ -168,7 +168,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("binaryFile source reads whole files with glob pruning") {
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = TestSpark.tempDir("graft_bin")
     java.nio.file.Files.write(dir.resolve("a.png"), Array[Byte](1, 2, 3, 4))
     java.nio.file.Files.write(dir.resolve("b.wav"), Array[Byte](9, 8, 7))
     val all = Formats.readBinary(spark, dir.toString)
@@ -182,7 +182,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("range-sorted write: per-file key ranges disjoint, rows sorted within files") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_rangesort").toString + "/orders"
+    val dir = TestSpark.tempDir("graft_rangesort").toString + "/orders"
     Formats.writeRangeSorted(Tables.orders(spark, TestSpark.sf0001), dir,
                              nFiles = 4, sortCol = "o_orderkey")
     val back = spark.read.parquet(dir)
@@ -208,7 +208,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("audited JSON ingest: malformed lines quarantined, good rows parse, failfast aborts") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_badjson")
+    val dir = TestSpark.tempDir("graft_badjson")
     java.nio.file.Files.write(dir.resolve("part.json"),
       ("""{"id": 1, "s": "ok"}""" + "\n" +
        """{"id": 2, "s": "also ok"}""" + "\n" +
@@ -252,8 +252,8 @@ class SourcesSpec extends AnyFunSuite {
     // dim spans the whole domain in every file)
     val grid = (0 until 64).flatMap(a => (0 until 64).map(b => (a.toLong, b.toLong)))
       .toDF("a", "b")
-    val zDir = Files.createTempDirectory("graft_zorder").toString + "/z"
-    val lDir = Files.createTempDirectory("graft_zorder").toString + "/lin"
+    val zDir = TestSpark.tempDir("graft_zorder").toString + "/z"
+    val lDir = TestSpark.tempDir("graft_zorder").toString + "/lin"
     Formats.writeZOrdered(grid, zDir, nFiles = 16, colA = "a", colB = "b")
     Formats.writeRangeSorted(grid, lDir, nFiles = 16, sortCol = "a")
     def fileBoxes(dir: String) = spark.read.parquet(dir)
@@ -345,7 +345,7 @@ class SourcesSpec extends AnyFunSuite {
       (1L, "https://a.example/x", "<html><body>hello world</body></html>"),
       (2L, "https://b.example/y?q=1", "multi\nline\nbody with ünïcödé"),
       (3L, "https://c.example/z", "")).toDF("doc_id", "url", "html")
-    val dir = Files.createTempDirectory("graft_warc_rt").toString
+    val dir = TestSpark.tempDir("graft_warc_rt").toString
     Warc.writeWarc(pages, dir, 2)
     val back = Warc.readWarc(spark, dir).cache()
     // warcinfo lead records present (one per non-empty file), skipped by type
@@ -367,7 +367,7 @@ class SourcesSpec extends AnyFunSuite {
       (5L, "https://w.example/a", "extracted text with ünïcödé"),
       (6L, "https://w.example/b", "line one\nline two"),
       (7L, "https://w.example/c", "")).toDF("doc_id", "url", "text")
-    val dir = Files.createTempDirectory("graft_wet_rt").toString
+    val dir = TestSpark.tempDir("graft_wet_rt").toString
     Warc.writeWet(docs, dir, 2)
     val back = Warc.readWet(spark, dir)
       .as[(Long, String, String)].collect().sortBy(_._1)
@@ -452,7 +452,7 @@ class SourcesSpec extends AnyFunSuite {
       (1L, "https://a.example/x", "<html><body>hello world</body></html>"),
       (2L, "https://b.example/y?q=1", "multi\nline\nbody with ünïcödé"),
       (3L, "https://c.example/z", "")).toDF("doc_id", "url", "html")
-    val dir = Files.createTempDirectory("graft_warc_gz").toString
+    val dir = TestSpark.tempDir("graft_warc_gz").toString
     Warc.writeWarc(pages, dir, 2, gzip = true)
     // files are .warc.gz and genuinely compressed (gzip magic first)
     val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".warc.gz"))
@@ -488,7 +488,7 @@ class SourcesSpec extends AnyFunSuite {
     val docs = Seq(
       (5L, "https://w.example/a", "extracted text with ünïcödé"),
       (6L, "https://w.example/b", "line one\nline two")).toDF("doc_id", "url", "text")
-    val dir = Files.createTempDirectory("graft_wet_gz").toString
+    val dir = TestSpark.tempDir("graft_wet_gz").toString
     Warc.writeWet(docs, dir, 1, gzip = true)
     assert(new java.io.File(dir).listFiles.exists(_.getName.endsWith(".wet.gz")))
     val back = Warc.readWet(spark, dir)
@@ -578,7 +578,7 @@ class SourcesSpec extends AnyFunSuite {
       .map(i => (i, s"https://e.example/$i", s"<html>page body $i with some words</html>"))
       .toDF("doc_id", "url", "html")
     for (gz <- Seq(true, false)) {
-      val dir = Files.createTempDirectory(s"graft_cdx_$gz").toString
+      val dir = TestSpark.tempDir(s"graft_cdx_$gz").toString
       Warc.writeWarc(pages, dir, 3, gzip = gz, cdx = true)
       val cdx = Warc.readCdx(spark, dir).cache()
       assert(cdx.count() == 20) // one index row per data record, warcinfo excluded
@@ -622,7 +622,7 @@ class SourcesSpec extends AnyFunSuite {
       (3L, "https://c.example/y", "<html>no links at all</html>"))
       .toDF("doc_id", "url", "html")
     val links = graft.ops.Links.extractLinks(pages)
-    val dir = Files.createTempDirectory("graft_wat_rt").toString
+    val dir = TestSpark.tempDir("graft_wat_rt").toString
     Warc.writeWat(pages, links, dir, 2, gzip = true)
     assert(new java.io.File(dir).listFiles.exists(_.getName.endsWith(".wat.gz")))
     val back = Warc.readWat(spark, dir).cache()
@@ -656,7 +656,7 @@ class SourcesSpec extends AnyFunSuite {
     }
     // corpus v1: 400 docs across shards 0..3 (span 100)
     val v1 = (0L until 400L).map(i => (i, s"doc $i body word")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_refresh").toString
+    val dir = TestSpark.tempDir("graft_refresh").toString
     Formats.writeShards(v1, dir, 100L)
     val before = md5s(s"$dir/shards")
     // delta: update one doc in shard 1, delete ALL of shard 3, insert doc 999 (new shard 9)

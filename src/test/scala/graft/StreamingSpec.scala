@@ -325,7 +325,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpoint recovery: restart resumes from the offset log, exactly once") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_ckpt")
+    val base = TestSpark.tempDir("graft_ckpt")
     val srcDir = s"$base/src"; val outDir = s"$base/out"; val ck = s"$base/ck"
     Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -687,12 +687,12 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
     val (sh, bands) = Dedup.buildNearDupIndex(corpus)
     val shP = sh.persist(); val bandsP = bands.persist()
-    val watched = JFiles.createTempDirectory("graft_warc_watch").toString
+    val watched = TestSpark.tempDir("graft_warc_watch").toString
     // a WARC segment lands as a uniquely-named file (the file-stream
     // source tracks seen paths — a crawler never rewrites a segment)
     var seg = 0
     def land(ids: Seq[Long]): Unit = {
-      val stage = JFiles.createTempDirectory("graft_warc_stage").toString
+      val stage = TestSpark.tempDir("graft_warc_stage").toString
       Warc.writeWarc(pageRows(ids).toDF("doc_id", "url", "html"), stage, 1)
       seg += 1
       JFiles.move(Paths.get(stage, "part-00000.warc"),
@@ -786,7 +786,7 @@ class StreamingSpec extends AnyFunSuite {
   test("writeWetStream: curated stream lands as one gzipped WET segment dir per micro-batch, round-trips by glob") {
     import graft.sources.Warc
     val ms = MemoryStream[(Long, String, String)](spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_wet_stream").toString
+    val dir = TestSpark.tempDir("graft_wet_stream").toString
     val q = Warc.writeWetStream(
       ms.toDF().toDF("doc_id", "url", "text"), dir)
     try {

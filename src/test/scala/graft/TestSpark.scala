@@ -17,4 +17,9 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** A fresh dir `prefix-<uuid>` under `java.io.tmpdir`, deleted at JVM
+    * exit: the one way test code makes a temp dir (ArtifactHomeSpec). */
+  def tempDir(prefix: String): java.nio.file.Path =
+    org.apache.spark.sql.graft.Shims.tempDir(prefix).toPath
 }
