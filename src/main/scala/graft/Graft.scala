@@ -383,7 +383,7 @@ object Graft {
   /** k-core decomposition over any (src, dst) edge list (treated
     * undirected/simple): the maximal subgraph where every node keeps
     * degree ≥ k, by simultaneous peeling; (node, core_deg). Throws if
-    * the peel hasn't reached fixpoint in `maxRounds`. */
+    * the peel hasn't converged in `maxRounds`. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame =
     ops.Graph.kCore(edges, k, maxRounds)
 

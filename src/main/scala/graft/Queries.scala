@@ -2773,7 +2773,7 @@ object Queries {
          |FROM deg LEFT JOIN tc ON deg.node = tc.node
          |ORDER BY node""".stripMargin,
     // unrolled simultaneous-peel: rounds >= the fixture's fixed
-    // peeling depth; extra rounds are no-ops = the Spark fixpoint exit
+    // peeling depth; extra rounds are no-ops = the Spark loop's early exit
     "q_kcore" -> Graph.kcoreOracleSql(),
     // bounded recursive CTE with UNION (set) semantics: rows are
     // (node, depth) pairs deduped across rounds, so the recursion is

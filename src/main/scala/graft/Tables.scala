@@ -174,7 +174,7 @@ object Tables {
       // round of a cluster-scale loop to ~1 task on a bad guess is the
       // expensive failure mode — derived plans keep a
       // defaultParallelism/8 floor. Loops whose width truly matters
-      // re-derive it from a materialized count ([[ops.Iterate.sized]]).
+      // size it from a materialized count ([[ops.Iterate.over]]).
       val bareScan = plan match {
         case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
         case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions.{call_function, udf}
   * Scale shape: the ranks map is a broadcast variable read by a
   * deterministic scalar UDF — a per-row pure function, narrow, no
   * shuffle (a UDF rather than a Catalyst expression because an
-  * until-fixpoint merge loop has no builtin-function form — the same
+  * merge-until-stable loop has no builtin-function form — the same
   * justification as the Bloom probe; the loop is allocation-light and
   * the table lookup is a hash map). Oracle-exempt: DuckDB has no BPE;
   * the golden (BpeSpec) checks the distributed count against an

@@ -123,14 +123,14 @@ object BpeTrain {
     // (a defaultParallelism-wide table froze every merge round at that
     // many near-empty tasks); a 10^8-row production vocabulary keeps
     // full width
-    var (words, _, vParts) = Iterate.sized(
+    val merges = mutable.Buffer.empty[(String, String, Long)]
+    var exhausted = false
+    Iterate.over(
       docToks.select(explode(col("toks")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("freq"))
         .select(split(col("w"), "").as("syms"), col("freq")),
-      nParts)
-    val merges = mutable.Buffer.empty[(String, String, Long)]
-    var exhausted = false
-    Iterate(spark, vParts) { loop =>
+      nParts) { (loop, vocab, _) =>
+    var words = vocab
     while (merges.size < nMerges && !exhausted) {
       val top = loop.collect(words
         .filter(size(col("syms")) > 1)
@@ -147,11 +147,13 @@ object BpeTrain {
       else {
         val batch = greedyBatch(top, nMerges - merges.size, batchMax)
         merges ++= batch
-        words = loop.checkpoint(words
+        val merged = loop.checkpoint(words
           .select(mergeBatch(col("syms"),
                              array(batch.map(m => lit(m._1)): _*),
                              array(batch.map(m => lit(m._2)): _*)).as("syms"),
                   col("freq")))
+        loop.release(words)
+        words = merged
       }
     }
     }

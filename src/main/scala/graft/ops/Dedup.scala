@@ -480,8 +480,8 @@ object Dedup {
     * already use (re-fingerprints the backing parquet per get,
     * rebuilds iff the corpus changed). q_dedup_cluster and
     * q_dedup_keep_best both consume the same pair stream + CC
-    * fixpoint; before r8 each independently paid rankedTokenSets +
-    * the prefix-filter join + its own iterative fixpoint (~10.8 s
+    * propagation; before r8 each independently paid rankedTokenSets +
+    * the prefix-filter join + its own propagation loop (~10.8 s
     * combined at sf0.1). Now the first consumer builds and the
     * second pays only its own presentation (keepBest = one quality
     * join + per-cluster window). At cluster scale this is the
@@ -520,20 +520,13 @@ object Dedup {
     * for the O(log d) pointer-jumping claim (pinned by the long-chain
     * fixture in GraftFacadeSpec). */
   private[graft] def clustersAndRounds(pairDf: DataFrame): (DataFrame, Int) = {
-    // localCheckpoint (not persist): each round's plan references the
-    // previous round TWICE (directly and through nbr_min), so without
-    // lineage truncation the logical plan doubles per round —
-    // exponential analysis cost and a driver OOM by ~round 25. The
-    // checkpoint materializes each round and restarts the lineage, the
-    // standard requirement of iterative DataFrame algorithms (use a
-    // reliable checkpoint dir on a cluster). The symmetric edge list
-    // comes from ONE explode pass (not pairs ∪ swap), so the feeding
-    // pair query is evaluated exactly once, inside this checkpoint.
-    // Explicit repartition before the checkpoint: AQE right-sizes the
-    // FEEDING query's last shuffle for its own output volume (often 1
-    // partition for a small pair list), and the checkpoint would
-    // freeze that width for EVERY round of the loop — serializing the
-    // iteration on one task.
+    // Each round's plan references the previous round TWICE (directly
+    // and through nbr_min), so every round ends in a checkpoint
+    // ([[Iterate.rounds]]); without lineage truncation the logical plan
+    // doubles per round — exponential analysis cost and a driver OOM by
+    // ~round 25. The symmetric edge list comes from ONE explode pass
+    // (not pairs ∪ swap), so the feeding pair query is evaluated
+    // exactly once, inside the setup checkpoint.
     // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
     val nParts = graft.Tables.adaptiveParts(pairDf)
     // partitioned on dst, NOT src (r16): the per-round neighbour-min
@@ -544,48 +537,38 @@ object Dedup {
     // off the old layout is the seed aggregate, paid once. The feeding
     // pair query's size estimate is usually unusable, so the loop is
     // sized from the materialized edge count.
-    val (edges, _, itParts) = Iterate.sized(pairDf
+    val symmetric = pairDf
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      nParts, col("dst"))
-    // Seed with min(id, min neighbour) — the first propagation round
-    // for free (one groupBy on the edge list, no join).
-    // labels only ever DECREASE (min propagation), so the label sum
-    // strictly decreases iff any label changed — a scalar observed on
-    // each round's checkpoint instead of a (self-lineage-ambiguous)
-    // prev⋈next join. DECIMAL(38,0), not Long: billions of 64-bit ids
-    // sum past 2^63 and a wrapped-equal Long sum would falsely signal
-    // convergence.
-    val labelSum = sum(col("label").cast("decimal(38,0)"))
-    val (labels, rounds) = Iterate(pairDf.sparkSession, itParts) { loop =>
-      // the seed scalar rides node count alongside the convergence sum:
-      // with AQE off in the loop nothing converts the per-round joins to
-      // broadcast at runtime, so the decision is made HERE from the
-      // measured node count — a label table provably under ~8 MB
-      // broadcasts in every round (map-side joins, the edge list is
-      // never sorted or re-shuffled); a cluster-scale node set keeps
-      // the partitioned joins. Same rule AQE applied, decided once from
-      // data, honest at any scale.
-      var (lbls, first) = loop.observed(edges.groupBy(col("src").as("id"))
-        .agg(least(col("src"), min(col("dst"))).as("label")),
-        labelSum, count(lit(1)))
-      val bcastLabels = first.getLong(1) * 48L < (8L << 20)
-      var prevSum = first.getDecimal(0)
-      // pointer jumping closes any component in O(log diameter) rounds
-      val rounds = loop.fixpoint(50, failAtCap = true) { _ =>
-        val (next, s) = loop.observed(
-          propagationRound(edges, lbls, bcastLabels), labelSum)
-        val converged = s.getDecimal(0).compareTo(prevSum) == 0
-        lbls = next
-        prevSum = s.getDecimal(0)
-        converged
-      }
-      (lbls, rounds)
-    }
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val (labels, rounds) = Iterate.over(symmetric, nParts, col("dst"))((loop, edges, _) => propagate(loop, edges))
     val sized = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     (finishClusters(labels, sized), rounds)
+  }
+
+  /** The min-label propagation loop over a symmetric (src, dst) edge
+    * list checkpointed on `loop` and partitioned on dst: (id, label) for
+    * every node, and the rounds it took.
+    *
+    * Seeded with min(id, min neighbour) — the first propagation round
+    * for free (one groupBy on the edge list, no join). Labels only ever
+    * DECREASE (min propagation), so the label sum strictly decreases
+    * iff any label changed — a scalar observed on each round's
+    * checkpoint job instead of a (self-lineage-ambiguous) prev⋈next
+    * join. DECIMAL(38,0), not Long: billions of 64-bit ids sum past
+    * 2^63 and a wrapped-equal Long sum would falsely signal
+    * convergence. Pointer jumping closes any component in
+    * O(log diameter) rounds; its join leaves the labels keyed on their
+    * label, so each round ends partitioned on id again. */
+  private[graft] def propagate(loop: Iterate, edges: DataFrame): (DataFrame, Int) = {
+    val out = loop.rounds(edges.groupBy(col("src").as("id"))
+        .agg(least(col("src"), min(col("dst"))).as("label")),
+      50, sum(col("label").cast("decimal(38,0)")))(
+      (labels, _) => loop.partitioned(propagationRound(edges, labels), col("id")),
+      stop = _ == _, failAtCap = true)
+    loop.release(edges)
+    out
   }
 
   /** One min-label propagation + pointer-jumping round, factored out
@@ -594,22 +577,17 @@ object Dedup {
     * checkpointed `ExistingRDD`, hiding any in-loop regression to a
     * cartesian or a lost map-side combine. Shape contract: two
     * equi-joins (neighbour-min, pointer jump) + one partial-agg min;
-    * no cartesian, no window. */
-  private[graft] def propagationRound(edges: DataFrame, labels: DataFrame,
-                                      broadcastLabels: Boolean = false): DataFrame = {
-    // small-graph regime (r17): when the label table measurably fits a
-    // broadcast (decided once in [[dedupClusters]] from the seed
-    // count), every join of the round runs map-side — the checkpointed
-    // edge list is scanned once per round and never sorted/re-shuffled
-    def maybeB(df: DataFrame): DataFrame =
-      if (broadcastLabels) broadcast(df) else df
+    * no cartesian, no window. Every join builds its hash table from the
+    * label side: a broadcast would be a job of its own in every round
+    * ([[Iterate.rounds]]), and the edge list on the dst key it is
+    * partitioned on is never sorted or re-shuffled. */
+  private[graft] def propagationRound(edges: DataFrame, labels: DataFrame): DataFrame = {
     // neighbour-min propagation ...
-    val lbl = maybeB(labels)
-    val nbrMin = maybeB(
-      edges.join(lbl, edges("dst") === lbl("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min")))
+    val lbl = labels.hint("shuffle_hash")
+    val nbrMin = edges.join(lbl, edges("dst") === lbl("id"))
+      .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
     val prop = labels
-      .join(nbrMin, labels("id") === nbrMin("src"), "left")
+      .join(nbrMin.hint("shuffle_hash"), labels("id") === nbrMin("src"), "left")
       .select(col("id"),
               least(col("label"), coalesce(col("nbr_min"), col("label")))
                 .as("label"))
@@ -617,7 +595,7 @@ object Dedup {
     // compression turns the O(diameter) round count into O(log d) —
     // every label is a node id, so the self-join always resolves
     prop.as("x")
-      .join(maybeB(prop.select(col("id").as("jid"), col("label").as("jlabel"))).as("j"),
+      .join(prop.select(col("id").as("jid"), col("label").as("jlabel")).hint("shuffle_hash").as("j"),
             col("x.label") === col("j.jid"), "left")
       .select(col("x.id").as("id"),
               coalesce(col("j.jlabel"), col("x.label")).as("label"))

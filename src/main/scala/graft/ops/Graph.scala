@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -75,7 +75,7 @@ object Graph {
           nodes.select(col("node"), col("dang"), (lit(1.0) / lit(nc)).as("r")),
           iters, danglingMass) { (rank, dm) =>
           pageRankRound(nodes, edges, rank, nc, dm.head)
-        }
+        }._1
         loop.release(edges, nodes)
         rank
       }
@@ -194,7 +194,7 @@ object Graph {
             .select(col("node"), col("dang"), col("is_seed"),
                     ((t + d * coalesce(dm.head.cast("double"), lit(0.0))) * col("is_seed") / lit(ns) +
                       d * coalesce(col("contrib"), lit(0.0))).as("r"))
-        }
+        }._1
         loop.release(edges, nodes)
         rank
       }
@@ -377,26 +377,22 @@ object Graph {
         val last = loop.rounds(hub0, iters - 1, max(col("h"))) { (hub, m) =>
           hubOf(authOf(hub, when(m.head > 0d, pow(lit(2.0), -floor(log2(m.head))))
                               .otherwise(lit(1.0))))
-        }
-        val auth = loop.checkpoint(authOf(last, lit(1.0)))
-        val hub = loop.checkpoint(hubOf(auth))
+        }._1
+        // the L1 norms ride the last auth and hub checkpoint jobs: exact
+        // in any merge order, like every sum of these integer dyadics
+        val (auth, na) = loop.observed(authOf(last, lit(1.0)), sum(col("a")))
+        val (hub, nh) = loop.observed(hubOf(auth), sum(col("h")))
         loop.release(edges, edgesByDst, last)
-        val hNorm = hub.agg(sum(col("h")).as("nh"))
-        val aNorm = auth.agg(sum(col("a")).as("na"))
+        def normalized(score: String, norm: Row): Column = round(
+          if (norm.isNullAt(0) || norm.getDouble(0) <= 0d) lit(0.0)
+          else coalesce(col(score), lit(0.0)) / lit(norm.getDouble(0)), 6)
         nodes
           .join(hub.withColumnRenamed("node", "hn"),
                 nodes("node") === col("hn"), "left")
           .join(auth.withColumnRenamed("node", "an"),
                 nodes("node") === col("an"), "left")
-          .crossJoin(broadcast(hNorm))
-          .crossJoin(broadcast(aNorm))
-          .select(col("node"),
-                  round(when(col("nh") > 0d,
-                             coalesce(col("h"), lit(0.0)) / col("nh"))
-                          .otherwise(lit(0.0)), 6).as("hub"),
-                  round(when(col("na") > 0d,
-                             coalesce(col("a"), lit(0.0)) / col("na"))
-                          .otherwise(lit(0.0)), 6).as("auth"))
+          .select(col("node"), normalized("h", nh).as("hub"),
+                  normalized("a", na).as("auth"))
       }
     }.orderBy("node")
   }
@@ -531,8 +527,8 @@ object Graph {
         .repartition(nParts, col("b")))
       // every node starts with its own label (an aggregate, not an alias
       // of the key, so the table stays partitioned on node)
-      val last = loop.rounds(bid.groupBy(col("a").as("node")).agg(min(col("a")).as("lbl")),
-                             iters) { (lbls, _) =>
+      val (last, _) = loop.rounds(bid.groupBy(col("a").as("node")).agg(min(col("a")).as("lbl")),
+                                  iters) { (lbls, _) =>
         val freq = und.join(lbls.hint("shuffle_hash"), und("b") === lbls("node"))
           .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("cnt"))
         // arg-max as a partial-aggregable min over (-cnt, lbl) structs
@@ -764,56 +760,48 @@ object Graph {
     *
     * A third iteration discipline next to [[pageRank]] (fixed-round
     * full relaxation) and [[labelPropagation]] (fixed-round
-    * synchronous vote): MONOTONE FRONTIER expansion. Only the nodes
-    * first reached in round d−1 join the edge table in round d — the
-    * settled distance set never re-enters the join, so total work is
+    * synchronous vote): MONOTONE FRONTIER expansion. The state is the
+    * settled (node, depth) table; its max depth and row count are
+    * observed on each round's checkpoint job, and round d's frontier is
+    * the rows at the carried max depth, filtered BEFORE the edge join —
+    * the settled set never re-enters the join, so total work is
     * Σ|frontier_d| edge lookups ≈ one pass over the reachable edges
-    * across ALL rounds, not per round. Each round is one equi-join
-    * (frontier repartitioned on the edge key), one distinct, one
-    * anti-join against the settled set, and a frontier count
-    * (observed on the frontier's checkpoint job) that detects the
-    * natural end of the graph (early exit on an empty frontier — BFS
-    * on a shallow graph must not pay the full cap). Depths are
-    * integers end to end: bit-exact against the oracle's bounded
-    * recursive CTE. */
+    * across ALL rounds, not per round. Each round ([[Iterate.rounds]]:
+    * planned once, one job per round) is one equi-join against the
+    * setup edge table (both partitioned on the join key), one
+    * distinct, one anti-join against the settled set and a union; an
+    * unchanged row count is the natural end of the graph (early exit
+    * on an empty frontier — BFS on a shallow graph must not pay the
+    * full cap). Depths are integers end to end: bit-exact against the
+    * oracle's bounded recursive CTE. */
   private[graft] val BfsMaxDepth = 8
 
   def bfsDepth(edgeDf: DataFrame, seeds: DataFrame,
                maxDepth: Int = BfsMaxDepth): DataFrame = {
-    val spark = edgeDf.sparkSession
-    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
-    val edges = edgeDf.select(col("src"), col("dst")).distinct()
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
     // null-safe: an aggregate-built seed frame (min over an empty
     // graph) yields one NULL row, which must not become a node
     val seedNodes = seeds.select(col("node"))
       .filter(col("node").isNotNull).distinct()
-    val nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node")))
-      .unionAll(seedNodes.select(col("node")))
-      .distinct()
-      .localCheckpoint()
-    val dist = Iterate(spark, nParts) { loop =>
-      var dst = loop.checkpoint(seedNodes.withColumn("depth", lit(0L)))
-      var frontier = dst
-      loop.fixpoint(maxDepth, failAtCap = false) { d =>
-        val reached = frontier
+    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
+    val (nodes, dist) = Iterate(edgeDf.sparkSession, Tables.adaptiveParts(edgeDf)) { loop =>
+      val edges = loop.checkpoint(
+        loop.partitioned(edgeDf.select(col("src"), col("dst")).distinct(), col("src")))
+      val nodes = loop.checkpoint(edges.select(col("src").as("node"))
+        .unionAll(edges.select(col("dst").as("node")))
+        .unionAll(seedNodes)
+        .distinct())
+      val init = loop.partitioned(seedNodes.withColumn("depth", lit(0L)), col("node"))
+      val (dist, _) = loop.rounds(init, maxDepth, max(col("depth")), count(lit(1)))({ (settled, c) =>
+        val frontier = settled.filter(col("depth") === c.head)
+        val fresh = frontier.hint("shuffle_hash")
           .join(edges, frontier("node") === edges("src"))
           .select(col("dst").as("node")).distinct()
-        val (fresh, n) = loop.observed(
-          reached.join(dst, Seq("node"), "left_anti")
-            .withColumn("depth", lit(d.toLong)),
-          count(lit(1)))
-        val done = n.getLong(0) == 0L
-        if (!done) {
-          dst = loop.checkpoint(dst.unionAll(fresh))
-          frontier = fresh
-        }
-        done
-      }
-      dst
+          .join(settled.hint("shuffle_hash"), Seq("node"), "left_anti")
+          .select(col("node"), (c.head + 1L).as("depth"))
+        loop.partitioned(settled.unionAll(fresh), col("node"))
+      }, stop = _ == _)
+      loop.release(edges)
+      (nodes, dist)
     }
     nodes.join(dist, Seq("node"), "left")
       .select(col("node"), coalesce(col("depth"), lit(-1L)).as("depth"))
@@ -921,42 +909,45 @@ object Graph {
     * subgraph — a wrong "dense" verdict on 100 TB is worse than a
     * loud one.
     *
-    * Scale shape per round: one partial-agg degree count riding the
-    * same src hash-partitioning as the edge table, two broadcast-able
-    * semi-joins (the survivor list only SHRINKS, so late rounds get
-    * cheaper), eager localCheckpoint to cut lineage, and the pruned
-    * edge count observed on that checkpoint's job as the convergence
-    * scalar. */
+    * Scale shape per round ([[Iterate.rounds]]: the edge list is the
+    * state, planned once, one job per round): one degree count riding
+    * the edge table's src hash-partitioning, two hash semi-joins
+    * against the survivors (the survivor list only SHRINKS, so late
+    * rounds get cheaper) and, at width > 1, one repartition back to
+    * src; the pruned edge count, observed on the round's checkpoint
+    * job, is the convergence scalar. */
   def kCore(edgeDf: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
-    val spark = edgeDf.sparkSession
-    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
     val base = edgeDf.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
     // the symmetrize+distinct feed is a derived plan whose size
     // Catalyst cannot estimate: the loop is sized from its edge count
-    var (edges, before, itParts) = Iterate.sized(base
+    // (size-adaptive iteration width, r16: see [[Tables.adaptiveParts]])
+    val core = Iterate.over(base
       .unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct(), nParts, col("src"))
-    if (before > 0L) Iterate(spark, itParts) { loop =>
-      loop.fixpoint(maxRounds, failAtCap = true) { _ =>
-        val surv = loop.checkpoint(edges.groupBy("src").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-          .select(col("src").as("node"))) // feeds both semi-joins below
-        val (pruned, after) = loop.observed(edges
-          .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst"), count(lit(1)))
-        val converged = after.getLong(0) == before
-        edges = pruned
-        before = after.getLong(0)
-        converged
-      }
+      .distinct(), Tables.adaptiveParts(edgeDf), col("src")) { (loop, edges, rows) =>
+      if (rows == 0L) edges else peel(loop, edges, k, maxRounds)
     }
-    edges.groupBy(col("src").as("node"))
+    core.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_deg"))
       .orderBy("node")
+  }
+
+  /** [[kCore]]'s peeling loop over a symmetric (src, dst) edge list
+    * checkpointed on `loop` and partitioned on src: the k-core's edges.
+    * The semi-join on dst leaves the edges partitioned on dst, so each
+    * round ends partitioned on src again. */
+  private[graft] def peel(loop: Iterate, edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+    val (core, _) = loop.rounds(edges, maxRounds, count(lit(1)))({ (e, _) =>
+      val surv = e.groupBy("src").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select(col("src").as("node")).hint("shuffle_hash")
+      loop.partitioned(e
+        .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi")
+        .select("src", "dst"), col("src"))
+    }, stop = _ == _, failAtCap = true)
+    loop.release(edges)
+    core
   }
 
   /** The q_kcore constructed edge fixture, shared by the Spark query
@@ -966,7 +957,7 @@ object Graph {
     * a 12-node planted clique (ids 1000+, degree 11, the surviving
     * core), a pseudo-random periphery on 200 nodes (degree ≈ 5 — all
     * peels at k = 6), and sparse bridges tying the two together so
-    * peeling actually erodes across rounds (2 rounds to fixpoint). */
+    * peeling actually erodes across rounds (2 rounds to the core). */
   private[graft] def kcoreEdges(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .filter(col("doc_id") < 500).select(col("doc_id"))
@@ -990,7 +981,7 @@ object Graph {
     * `rounds` MATERIALIZED peel steps (each = degree filter + edge
     * prune). `rounds` must be ≥ the fixture's peeling depth (2 — the
     * slice is scale-fixed, so the depth is too); extra rounds are
-    * no-ops, matching the Spark side's early exit at fixpoint. */
+    * no-ops, matching the Spark side's early exit at the core. */
   private[graft] def kcoreOracleSql(k: Int = 6, rounds: Int = 6): String = {
     val steps = (1 to rounds).map { i =>
       s"""s$i AS MATERIALIZED (SELECT src FROM (
@@ -1032,47 +1023,40 @@ object Graph {
     * be non-negative integers: min over integers is order-independent,
     * so no floats anywhere and no FP-order exemption.
     *
-    * Scale shape per round: one equi-join of the reached table against
-    * the edge list (both hash-partitioned on the join key), one
-    * partial-agg min — shuffle volume is frontier-adjacent edges, not
-    * the graph; eager localCheckpoint cuts the iterative lineage.
-    * Unreachable nodes report dist −1. */
+    * Scale shape per round ([[Iterate.rounds]]: planned once, one job
+    * per round): one equi-join of the reached table against the edge
+    * list (both hash-partitioned on the join key), one partial-agg min
+    * — shuffle volume is frontier-adjacent edges, not the graph; the
+    * round's eager checkpoint cuts the iterative lineage. Unreachable
+    * nodes report dist −1. */
   def sssp(edgeDf: DataFrame, seeds: DataFrame,
            rounds: Int = SsspRounds): DataFrame = {
-    val spark = edgeDf.sparkSession
-    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
-    val edges = edgeDf.select(col("src"), col("dst"), col("cost"))
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
     val seedNodes = seeds.select(col("node"))
       .filter(col("node").isNotNull).distinct()
-    val nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node")))
-      .unionAll(seedNodes)
-      .distinct()
-      .localCheckpoint()
-    // convergence scalar: reached-count and total distance; distances
-    // only DECREASE and the reached set only GROWS under min
-    // relaxation, so an unchanged (count, sum) pair means a fixpoint —
-    // and a fixpoint is final (further rounds are idempotent), so
-    // early exit returns EXACTLY the fixed-round result. Sum carried
-    // in DECIMAL(38,0): the CC overflow-safe discipline.
-    val scalar = Seq(count(lit(1)), sum(col("dist").cast("decimal(38,0)")))
-    val dist = Iterate(spark, nParts) { loop =>
-      var (d, prev) = loop.observed(seedNodes.withColumn("dist", lit(0L)), scalar: _*)
-      loop.fixpoint(rounds, failAtCap = false) { _ =>
-        val relaxed = d
+    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
+    val (nodes, dist) = Iterate(edgeDf.sparkSession, Tables.adaptiveParts(edgeDf)) { loop =>
+      val edges = loop.checkpoint(
+        loop.partitioned(edgeDf.select(col("src"), col("dst"), col("cost")), col("src")))
+      val nodes = loop.checkpoint(edges.select(col("src").as("node"))
+        .unionAll(edges.select(col("dst").as("node")))
+        .unionAll(seedNodes)
+        .distinct())
+      // stop test: reached-count and total distance; distances only
+      // DECREASE and the reached set only GROWS under min relaxation, so
+      // an unchanged (count, sum) pair means a fixed point — and a fixed
+      // point is final (further rounds are idempotent), so early exit
+      // returns EXACTLY the fixed-round result. Sum carried in
+      // DECIMAL(38,0): the CC overflow-safe discipline.
+      val init = loop.partitioned(seedNodes.withColumn("dist", lit(0L)), col("node"))
+      val (dist, _) = loop.rounds(init, rounds,
+                                  count(lit(1)), sum(col("dist").cast("decimal(38,0)")))({ (d, _) =>
+        val relaxed = d.hint("shuffle_hash")
           .join(edges, d("node") === edges("src"))
           .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"))
-        val (next, cur) = loop.observed(d.unionAll(relaxed)
-          .groupBy("node").agg(min(col("dist")).as("dist")), scalar: _*)
-        val converged = cur == prev
-        d = next
-        prev = cur
-        converged
-      }
-      d
+        d.unionAll(relaxed).groupBy("node").agg(min(col("dist")).as("dist"))
+      }, stop = _ == _)
+      loop.release(edges)
+      (nodes, dist)
     }
     nodes.join(dist, Seq("node"), "left")
       .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Graph, Iterate}
+import graft.ops.{Dedup, Graph, Iterate}
 
 /** The loop skeleton every iterative operator runs on ([[Iterate]]):
   * round caps fail loudly, and a loop's AQE-off fixed-width regime
@@ -30,23 +30,21 @@ class IterateSpec extends AnyFunSuite {
   private val Aqe = "spark.sql.adaptive.enabled"
   private val Width = "spark.sql.shuffle.partitions"
 
-  test("fixpoint: a round whose scalar never repeats throws at the cap") {
-    var rounds = 0
-    val e = intercept[IllegalStateException] {
-      Iterate(spark, 2) { loop =>
-        var df = spark.range(8).toDF("x")
-        var prev: Any = null
-        loop.fixpoint(3, failAtCap = true) { _ =>
-          rounds += 1
-          val (next, s) = loop.observed(df.select((col("x") + 1).as("x")), sum(col("x")))
-          val converged = s.get(0) == prev
-          df = next
-          prev = s.get(0)
-          converged
-        }
-      }
+  test("rounds: a round whose scalar never repeats throws at the cap") {
+    // a (k, x) state partitioned on k; every round adds 1 to x, so its
+    // observed sum never repeats
+    val init = spark.range(8).select((col("id") % 2).as("k"), col("id").as("x"))
+      .repartition(2, col("k"))
+    def grow(failAtCap: Boolean): Int = Iterate(spark, 2) { loop =>
+      loop.rounds(init, 3, sum(col("x")))(
+        (df, _) => df.select(col("k"), (col("x") + 1).as("x")),
+        stop = _ == _, failAtCap = failAtCap)._2
     }
-    assert(rounds == 3)
+    assert(grow(failAtCap = false) == 3)
+    var e: IllegalStateException = null
+    // one job checkpoints the initial state, one each round
+    val jobs = jobsOf { e = intercept[IllegalStateException](grow(failAtCap = true)) }
+    assert(jobs == 1 + 3, s"$jobs jobs, not the initial state and exactly 3 rounds")
     assert(e.getMessage.contains("3 rounds"), e.getMessage)
   }
 
@@ -97,6 +95,19 @@ class IterateSpec extends AnyFunSuite {
 
   private val graph = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d", "e" -> "d", "b" -> "e")
 
+  /** The directed path p00 → p01 → … of `n` nodes. From p00, BFS and
+    * unit-cost SSSP take n rounds: n − 1 that reach one node each and
+    * one that changes nothing. Symmetrized, 2-core peeling takes
+    * n / 2 + 1 rounds (n even): each strips both ends, the last strips
+    * nothing. */
+  private def path(n: Int): DataFrame =
+    (0 until n - 1).map(i => (f"p$i%02d", f"p${i + 1}%02d")).toDF("src", "dst")
+  private def costed(edges: DataFrame): DataFrame = edges.withColumn("cost", lit(1L))
+  private lazy val origin = Seq("p00").toDF("node")
+  /** The long-id path 0 — 1 — … of `n` nodes as dedup pairs. */
+  private def chain(n: Int): DataFrame =
+    (0L until n - 1L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+
   /** Jobs `body` starts. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -124,19 +135,85 @@ class IterateSpec extends AnyFunSuite {
       val lp = jobsOf(Graph.labelPropagation(edges, iters))
       assert(lp <= 2 + iters, s"labelPropagation($iters): $lp jobs")
     }
+    // the loops that stop on their observed scalars: BFS's and SSSP's
+    // setup is the edge table, the node table and the initial state;
+    // k-core's and CC's the sized edge table and the initial state
+    for (n <- Seq(4, 8)) {
+      val bfs = jobsOf(Graph.bfsDepth(path(n), origin))
+      assert(bfs <= 3 + n, s"bfsDepth over $n nodes: $bfs jobs")
+      val sssp = jobsOf(Graph.sssp(costed(path(n)), origin))
+      assert(sssp <= 3 + n, s"sssp over $n nodes: $sssp jobs")
+      val core = jobsOf(Graph.kCore(path(n), 2))
+      assert(core <= 2 + n / 2 + 1, s"kCore over $n nodes: $core jobs")
+    }
+    for (n <- Seq(2, 40)) {
+      var rounds = 0
+      val cc = jobsOf { rounds = Dedup.clustersAndRounds(chain(n))._2 }
+      assert(cc <= 2 + rounds, s"clustersAndRounds over $n nodes: $cc jobs, $rounds rounds")
+    }
   }
 
   test("fixed-round loops: rounds 2..n compile no new code") {
     val edges = graph.toDF("src", "dst")
-    // a one-round run compiles the setup and the round; rounds 2..6 run
-    // the same code with other carried dangling masses, which a literal
-    // would have inlined into a new class each round
-    Graph.pageRank(edges, iters = 1)
-    Graph.labelPropagation(edges, iters = 1)
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    Graph.pageRank(edges, iters = 6)
-    Graph.labelPropagation(edges, iters = 6)
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+    // a one-round run compiles the setup and the round; later rounds run
+    // the same code with other carried values (dangling masses, depths),
+    // which a literal would have inlined into a new class each round.
+    // Each loop is warmed and measured back to back: the JVM-wide cache
+    // of generated classes holds 100, so warming every loop first would
+    // let them evict each other's classes and count recompiles.
+    val loops = Seq[(String, () => Unit, () => Unit)](
+      ("pageRank", () => Graph.pageRank(edges, iters = 1), () => Graph.pageRank(edges, iters = 6)),
+      ("labelPropagation", () => Graph.labelPropagation(edges, iters = 1),
+        () => Graph.labelPropagation(edges, iters = 6)),
+      ("bfsDepth", () => Graph.bfsDepth(path(8), origin, maxDepth = 1),
+        () => Graph.bfsDepth(path(8), origin, maxDepth = 6)),
+      ("sssp", () => Graph.sssp(costed(path(8)), origin, rounds = 1),
+        () => Graph.sssp(costed(path(8)), origin, rounds = 6)),
+      // a peel capped at one round throws after running it
+      ("kCore", () => intercept[IllegalStateException](Graph.kCore(path(8), 2, maxRounds = 1)),
+        () => Graph.kCore(path(8), 2)),
+      // one edge converges in one round, the 40-node chain in several
+      ("clustersAndRounds", () => Dedup.clustersAndRounds(chain(2)),
+        () => Dedup.clustersAndRounds(chain(40))))
+    for ((name, warm, run) <- loops) {
+      warm()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      run()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"$name: $compiled classes compiled after its warm-up")
+    }
+  }
+
+  test("convergence loops keep their state's partitioning at width 3 and above") {
+    // CC and k-core size their loop from the edge count, so they run
+    // their loops directly at width 3; BFS and SSSP take the width of
+    // an input whose size estimate is large (a cross join's estimate is
+    // the product of its sides', and a filter does not reduce it)
+    val one = spark.range(1000).filter(col("id") === 0)
+    val wide = (df: DataFrame) => df.crossJoin(one).drop("id").crossJoin(one).drop("id")
+    assert(Tables.adaptiveParts(wide(path(8))) >= 3)
+    def rows(df: DataFrame) = df.collect().toSeq
+    assert(rows(Graph.bfsDepth(wide(path(8)), origin)) == rows(Graph.bfsDepth(path(8), origin)))
+    assert(rows(Graph.sssp(wide(costed(path(8))), origin)) ==
+           rows(Graph.sssp(costed(path(8)), origin)))
+    val pairs = chain(40)
+    val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val (labels, rounds) = Iterate(spark, 3) { loop =>
+      Dedup.propagate(loop, loop.checkpoint(sym.repartition(3, col("dst"))))
+    }
+    val (clusters, narrowRounds) = Dedup.clustersAndRounds(pairs)
+    assert(rounds == narrowRounds)
+    assert(rows(labels.orderBy("id")) ==
+           rows(clusters.select(col("doc_id").as("id"), col("cluster").as("label"))))
+    // the pendant f goes in the first round, the second changes nothing
+    val g = (graph :+ ("e" -> "f")).toDF("src", "dst")
+    val core = Iterate(spark, 3) { loop =>
+      Graph.peel(loop, loop.checkpoint(g.union(g.select(col("dst"), col("src"))).distinct()
+        .repartition(3, col("src"))), 2, 50)
+    }
+    assert(rows(core.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+                  .orderBy("node")) == rows(Graph.kCore(g, 2)))
   }
 
   test("fixed-round loops release each superseded round state") {
@@ -153,6 +230,13 @@ class IterateSpec extends AnyFunSuite {
     // nodes, the adjacency), the initial state or the 9 intermediate ones
     assert(held(Graph.pageRank(edges, iters = 10)) <= 1)
     assert(held(Graph.labelPropagation(edges, iters = 10)) <= 1)
+    // the same for the loops that stop on a scalar (8, 8, 5 rounds and
+    // CC's several); BFS and SSSP also keep the node table their result
+    // reads
+    assert(held(Graph.bfsDepth(path(8), origin)) <= 2)
+    assert(held(Graph.sssp(costed(path(8)), origin)) <= 2)
+    assert(held(Graph.kCore(path(8), 2)) <= 1)
+    assert(held(Dedup.clustersAndRounds(chain(40))._1) <= 1)
   }
 
   test("concurrent: TPC-H q1 beside a running pageRank keeps AQE and its serial result") {
