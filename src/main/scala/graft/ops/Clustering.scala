@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -11,24 +12,24 @@ import graft.functions.VectorFunctions
   * sampling, SemDeDup-style semantic dedup all start from a k-means
   * partition of the embedding space).
   *
-  * Deterministic Lloyd's iterations, DataFrame-first:
+  * Deterministic Lloyd's iterations, DataFrame-first, one trainer
+  * ([[lloyd]]) for q_kmeans and for the PQ codebooks ([[Quant]]):
   *
-  *  - init is the k lowest `vec_id` vectors (no RNG — the same corpus
-  *    always yields the same model; k-means++ would add seed state for
-  *    little gain at this k);
-  *  - the assign step is one narrow codegen projection: squared
-  *    distance ‖v‖² − 2·v·c + ‖c‖² against every centroid (the v·c
-  *    dot is the codegen [[graft.functions.DotProduct]]; ‖c‖² folds to
-  *    a literal), argmin via `array_min` over (d2, cid) structs —
-  *    lexicographic struct ordering gives the lowest-cid tiebreak
-  *    deterministically;
-  *  - the update step is posexplode → (cluster, dim) partial-agg mean
-  *    over the EXACT 2⁵⁰-scaled DECIMAL(38,0) carrier (the
-  *    [[graft.ops.Similarity.centroidDrift]] discipline — r12,
-  *    replacing the FP-order-dependent `avg`): k·d cells come back to
-  *    the driver as the next model — centroids are MODEL state (k·d
-  *    doubles, O(KB)), the same thing MLlib's KMeans collects per
-  *    iteration; corpus rows never leave the executors;
+  *  - init is the k lowest-id points of each group (no RNG — the same
+  *    corpus always yields the same model; k-means++ would add seed
+  *    state for little gain at this k);
+  *  - the assign step ([[assign]]) is a broadcast join of the points
+  *    with their group's centroids: squared distance
+  *    ‖v‖² − 2·v·c + ‖c‖² per (point, centroid) pair (the dots are the
+  *    codegen [[graft.functions.DotProduct]]), argmin
+  *    `min(struct(d2, cid))` per point — lexicographic struct ordering
+  *    gives the lowest-cid tiebreak deterministically. The generated
+  *    code does not depend on k or on the centroid values;
+  *  - the update step is the exact mean per (group, cluster)
+  *    ([[Similarity.meanVectors]]: posexplode → (cluster, dim)
+  *    partial-agg sum over the 2⁵⁰-scaled DECIMAL(38,0) carrier, one
+  *    divide, arrays rebuilt in dim order) — centroids stay a table on
+  *    the executors, k·d cells per group;
   *  - an empty cluster keeps its previous centroid (no resampling —
   *    determinism again).
   *
@@ -54,118 +55,92 @@ object Clustering {
   /** Lloyd's k-means over any (vec_id, embedding) DataFrame — the
     * library entry point ([[graft.Graft.kmeans]]). Returns one row per
     * vector: (vec_id, cluster, dist) with dist the Euclidean distance
-    * to the final centroid. */
+    * to the final centroid. The points, the centroid rounds and the
+    * final assignment are checkpoints of one loop; only the result's
+    * blocks outlive the call, so a k/iters tuning loop accumulates no
+    * cached tables. */
   def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 5): DataFrame = {
     require(k >= 1 && iters >= 1)
-    val spark = embeddings.sparkSession
-    VectorFunctions.register(spark)
+    VectorFunctions.register(embeddings.sparkSession)
+    val v = embeddings.select(lit(0).as("g"), col("vec_id").as("id"),
+                              transform(col("embedding"), x => x.cast("double")).as("v"))
     // NOT widened (r16, measured): the per-iteration stages carry a
     // ~300 ms fixed per-task cost at this scale (ProfileOne: exec time
     // grows linearly with task count while wall stays flat), so
     // fanning the one-split fixture to 32 tasks multiplied overhead
     // without cutting wall time (q_kmeans 2.1 s -> 3.6 s, reverted).
-    val v = embeddings
-      .select(col("vec_id"),
-              transform(col("embedding"), x => x.cast("double")).as("v"))
-      .persist() // read once per iteration + the final assign
-    // deterministic init: the k lowest vec_ids' vectors (k rows; a
-    // corpus with n < k simply yields n clusters)
-    var centroids: IndexedSeq[Seq[Double]] = v
-      .orderBy("vec_id").limit(k)
-      .collect()
-      .map(_.getSeq[Double](1))
-      .toIndexedSeq
-    require(centroids.nonEmpty, "kmeans: embeddings input is empty")
-    centroids = lloyd(v, centroids, iters)
-    // materialize the final assignment (localCheckpoint cuts the
-    // lineage back to `v`) so the persisted projection can be released
-    // here — repeated facade calls (a k/iters tuning loop) must not
-    // accumulate cached DataFrames until LRU eviction
-    val out = assign(v, centroids)
-      .select(col("vec_id"), col("cluster"),
-              round(sqrt(col("d2")), 6).as("dist"))
-      .orderBy("vec_id")
-      .localCheckpoint()
-    v.unpersist()
-    out
+    Iterate(embeddings.sparkSession, Tables.adaptiveParts(v)) { loop =>
+      val points = pointTable(loop, v)
+      val books = lloyd(loop, points, k, iters)
+      val out = loop.checkpoint(assign(points, books)
+        .select(col("id").as("vec_id"), col("cid").as("cluster"),
+                round(sqrt(col("d2")), 6).as("dist"))
+        .orderBy("vec_id"))
+      loop.release(points, books)
+      out
+    }
   }
 
-  /** The fixed-iteration Lloyd loop over a persisted (vec_id, v)
-    * projection, factored out of [[kmeans]] so PQ codebook training
-    * ([[Quant]]) reuses the identical machinery: exact update-mean
-    * carrier (x·2⁵⁰ is integral for any float32-origin |x| ≥ 2⁻²⁶,
-    * so the DECIMAL(38,0) sum is order-independent — partition order
-    * can't move a bit — and the single final-divide rounding is
-    * deterministic on any engine; the guard raises on values the
-    * carrier can't hold instead of silently reintroducing FP-order
-    * nondeterminism), empty clusters keep their previous centroid.
-    * Per iteration: one narrow assign scan + one (cluster, dim)
-    * groupBy; centroid state is k·d doubles of driver model state. */
-  private[graft] def lloyd(v: DataFrame, init: IndexedSeq[Seq[Double]],
-                           iters: Int): IndexedSeq[Seq[Double]] = {
-    var centroids = init
-    val dim = init.head.length
-    val S = 1125899906842624.0 // 2^50
-    val xs = when(col("x") * S === floor(col("x") * S),
-                  (col("x") * S).cast("decimal(38,0)"))
-      .otherwise(raise_error(concat(
-        lit("kmeans: embedding value has >50 fraction bits: "),
-        col("x").cast("string"))))
-    Iterate(v.sparkSession, Tables.adaptiveParts(v)) { loop =>
-    for (_ <- 1 to iters) {
-      val means = loop.collect(assign(v, centroids)
-        .select(col("cluster"), posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy("cluster", "d")
-        .agg(sum(xs).as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("d"),
-                (col("s").cast("double") / (lit(S) * col("n"))).as("m")))
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          val c = new Array[Double](dim)
-          rows.foreach(r => c(r.getInt(1)) = r.getDouble(2))
-          cid -> c.toSeq
-        }
-      // empty cluster -> previous centroid survives
-      centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
-    }
-    }
-    centroids
+  /** (g, id, v) `points` checkpointed on `loop` in the layout
+    * [[lloyd]] reads them in: partitioned on (g, id) and sorted by it
+    * within each partition, the grouping of every round's per-point
+    * argmin, which the broadcast join keeps, so that argmin needs no
+    * exchange. Their count is observed on the same job: empty points
+    * are rejected here. The caller releases the checkpoint. */
+  private[graft] def pointTable(loop: Iterate, points: DataFrame): DataFrame = {
+    val (t, n) = loop.observed(
+      loop.partitioned(points, col("g"), col("id")).sortWithinPartitions("g", "id"),
+      count(lit(1)))
+    require(n.getLong(0) > 0, "lloyd: points input is empty")
+    t
   }
 
-  /** One assign pass: (vec_id, v, cluster, d2) with the argmin
-    * centroid id and squared distance.
+  /** Fixed-iteration Lloyd over (g, id, v) points: k centroids per
+    * group `g`, trained on each group's points alone — q_kmeans is one
+    * group, the PQ codebooks ([[Quant]]) are one group per subspace.
+    * `points` is a [[pointTable]] of `loop`; the caller owns it.
+    * Returns the (g, cid, c) centroid table, a checkpoint of `loop` the
+    * caller releases.
     *
-    * Centroids are passed as DATA, not literals (r17): baking each
-    * round's centroids in as `typedlit` constants made every Lloyd
-    * round a DISTINCT generated class — recompiled and JIT-cold each
-    * round (ProfileOne r16: per-rep wall 31.8 → 7.4 → 3.9 s as the
-    * JIT warmed). Referencing them through a broadcast 1-row
-    * (cs, c2s) table keeps the generated source identical across
-    * rounds (only k and dim shape the expression tree), so one
-    * compiled class serves the whole run. Arithmetic is unchanged bit
-    * for bit: ‖c‖² is still the driver-side Scala fold (now shipped
-    * as a value instead of a literal), the dot is the same ascending
-    * codegen loop, and `element_at` only changes WHERE the operand
-    * bytes come from. */
-  private[graft] def assign(v: DataFrame,
-                     centroids: IndexedSeq[Seq[Double]]): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    val cdf = Seq((
-      centroids.map(_.toArray).toArray,
-      centroids.map(c => c.map(x => x * x).sum).toArray
-    )).toDF("cs", "c2s")
-    val vv = VectorFunctions.dot(col("v"), col("v"))
-    val scored: Seq[Column] = centroids.indices.map { i =>
-      struct((vv - lit(2.0) *
-                VectorFunctions.dot(col("v"), element_at(col("cs"), i + 1))
-               + element_at(col("c2s"), i + 1)).as("d2"),
-             lit(i).as("cid"))
+    * The seeds are the k lowest ids of each group (a group of n < k
+    * points gets n centroids); each round is [[assign]] plus the exact
+    * mean per (g, cid) ([[Similarity.meanVectors]]: x·2⁵⁰ is integral
+    * for any float32-origin |x| ≥ 2⁻²⁶, so the DECIMAL(38,0) sum is
+    * order-independent and the one final divide is deterministic on
+    * any engine; the guard raises on values the carrier cannot hold),
+    * and an empty cluster keeps its previous centroid. The round is
+    * planned once ([[Iterate.rounds]]): the centroid table reaches the
+    * points as broadcast data, never as literals, so every round runs
+    * the same generated code. */
+  private[graft] def lloyd(loop: Iterate, points: DataFrame, k: Int,
+                           iters: Int): DataFrame = {
+    val seeds = points
+      .withColumn("rn", row_number().over(Window.partitionBy("g").orderBy("id")))
+      .filter(col("rn") <= k)
+      .select(col("g"), (col("rn") - 1).cast("int").as("cid"), col("v").as("c"))
+    val (books, _) = loop.rounds(loop.partitioned(seeds, col("g"), col("cid")), iters) { (books, _) =>
+      val means = Similarity.meanVectors(assign(points, books), Seq("g", "cid"), col("v"))
+      loop.partitioned(books.join(means.hint("shuffle_hash"), Seq("g", "cid"), "left")
+        .select(col("g"), col("cid"), coalesce(means("c"), books("c")).as("c")),
+        col("g"), col("cid"))
     }
-    v.crossJoin(broadcast(cdf))
-      .withColumn("best", array_min(array(scored: _*)))
-      .select(col("vec_id"), col("v"),
-              col("best.cid").as("cluster"),
+    books
+  }
+
+  /** The nearest centroid of each point: (g, id, v, cid, d2), d2 the
+    * squared distance to centroid `cid` of the point's group in
+    * `books` (g, cid, c). One broadcast join (the centroid table is
+    * k·d cells per group — model state, broadcast by construction)
+    * and one per-point `min(struct(d2, cid))`. The generated code has
+    * the same size at any k: an argmin over a k-term literal array
+    * costs seconds of codegen per job at k = 256. */
+  private[graft] def assign(points: DataFrame, books: DataFrame): DataFrame = {
+    val d2 = VectorFunctions.dot(col("v"), col("v")) -
+      lit(2.0) * VectorFunctions.dot(col("v"), col("c")) + col("c2")
+    points.join(broadcast(books.withColumn("c2", VectorFunctions.dot(col("c"), col("c")))), "g")
+      .groupBy("g", "id")
+      .agg(min(struct(d2.as("d2"), col("cid"))).as("best"), first(col("v")).as("v"))
+      .select(col("g"), col("id"), col("v"), col("best.cid").as("cid"),
               // clamp tiny negative FP residue so sqrt stays real
               greatest(col("best.d2"), lit(0.0)).as("d2"))
   }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.DataType
 
 /** The skeleton every iteration loop runs on: PageRank, PPR, HITS,
   * label propagation, BFS, SSSP, k-core, connected components, BPE
-  * training and Lloyd. A loop is `Iterate(spark, width) { loop => … }`
+  * training, Lloyd (q_kmeans and the PQ codebooks) and the quality
+  * classifier's trainer. A loop is `Iterate(spark, width) { loop => … }`
   * (or [[Iterate.over]], which sizes the width from its input), and the
   * helper owns the four things every loop repeats:
   *
@@ -120,11 +121,12 @@ private[graft] final class Iterate private (loop: SparkSession,
     val slots = scalars.indices.map { i =>
       Carried(i, CatalystTypeConverters.convertToCatalyst(row0.get(i)), row0.schema(i).dataType)
     }
-    // the template reads every state column as nullable, so any state a
-    // round produces fits its leaf
-    val in = Shims.rescan(caller, s0, s0.output.map(_.withNullability(true)))
+    // the template reads every state column as nullable, nested fields
+    // and elements too, so any state a round produces fits its leaf
+    val in = Shims.rescan(caller, s0, s0.output.map(a =>
+      a.withNullability(true).withDataType(Shims.nullable(a.dataType))))
     val out = Iterate.observing(round(Shims.ofRows(caller, in), slots.map(Shims.column)), scalars)
-    require(out.schema.map(_.dataType) == s0.schema.map(_.dataType),
+    require(out.schema.map(f => Shims.nullable(f.dataType)) == in.output.map(_.dataType),
       s"a round must keep its state's columns: ${s0.schema.simpleString} -> ${out.schema.simpleString}")
     val plan = planned(out)
     // the template reads a state of known layout in place, so every
@@ -226,10 +228,14 @@ private[graft] object Iterate {
 /** A scalar a loop carries into a round ([[Iterate.rounds]]):
   * `value` as a leaf that is neither folded nor inlined, so every round
   * generates the same code whatever its value. Always nullable: the
-  * template is analyzed once, with the first round's value. */
+  * template is analyzed once, with the first round's value. Its hash
+  * leaves `value` out: codegen numbers common subexpressions in hash
+  * order, so a value-dependent hash renumbers a round's generated code
+  * (a new class) whenever the value changes. */
 private[graft] case class Carried(slot: Int, value: Any, dataType: DataType)
     extends LeafExpression with CodegenFallback {
   override def foldable: Boolean = false
   override def nullable: Boolean = true
   override def eval(input: InternalRow): Any = value
+  override def hashCode(): Int = (slot, dataType).##
 }

@@ -255,11 +255,10 @@ object Quant {
   // PQ is the 16-64× tier that makes 100 TB of embeddings fit cluster
   // RAM. d=64 vectors split into M=8 subvectors of 8 dims; each
   // subspace gets a K=256-centroid codebook (the standard PQ 8×8
-  // geometry), trained by a join-argmin Lloyd loop that reuses
-  // [[Clustering.lloyd]]'s exact-DECIMAL mean-carrier discipline (not
-  // the lloyd function itself — its literal-argmin is a k≤8 shape;
-  // see [[pqAssign]]), so codebooks are bit-deterministic, and a
-  // vector's at-rest payload collapses to 8 one-byte codes — 8 bytes
+  // geometry), all M trained by the one Lloyd trainer q_kmeans runs
+  // ([[Clustering.lloyd]], one group per subspace: join-argmin assign,
+  // exact-DECIMAL mean carrier), so codebooks are bit-deterministic,
+  // and a vector's at-rest payload collapses to 8 one-byte codes — 8 bytes
   // vs int8's 64 ints + scale. Search is ASYMMETRIC (ADC): the probe
   // keeps full precision, builds one M×K lookup table of
   // subvector·centroid dots, and each candidate scores as 8 table
@@ -291,67 +290,60 @@ object Quant {
   val PqFlips = 4
   val PqOccupancy = 64L
 
-  /** (vec_id, sub, v) — the per-subspace training/encoding projection
-    * of the normalized posting vectors, SNAPPED to the 2⁻²⁶ grid:
-    * normalization produces full-mantissa doubles that the Lloyd
-    * exact-carrier guard (x·2⁵⁰ integral) rightly rejects, so PQ
-    * quantizes its training/encoding inputs to 26 fraction bits first
-    * — a ~1.5e-8 perturbation, noise next to 4-bit codes, and the
-    * carrier then holds by construction. */
+  /** (g, id, v) — the per-subspace training/encoding points of the
+    * normalized posting vectors (g the subspace, id the vec_id),
+    * SNAPPED to the 2⁻²⁶ grid: normalization produces full-mantissa
+    * doubles that the Lloyd exact-carrier guard (x·2⁵⁰ integral)
+    * rightly rejects, so PQ quantizes its training/encoding inputs to
+    * 26 fraction bits first — a ~1.5e-8 perturbation, noise next to
+    * 4-bit codes, and the carrier then holds by construction. */
   private def pqSubvecs(vecs: DataFrame): DataFrame = {
     val G = 67108864.0 // 2^26
-    vecs.select(col("vec_id"), posexplode(array(
+    vecs.select(col("vec_id").as("id"), posexplode(array(
         (0 until PqM).map(j =>
           slice(col("vn"), j * PqDSub + 1, PqDSub)): _*))
-      .as(Seq("sub", "sv")))
-      .select(col("vec_id"), col("sub"),
+      .as(Seq("g", "sv")))
+      .select(col("g"), col("id"),
               transform(col("sv"),
                 x => floor(x.cast("double") * lit(G) + lit(0.5)) / lit(G))
                 .as("v"))
   }
 
-  /** Argmin-over-codebook as a BROADCAST JOIN (subvectors × their
-    * subspace's K centroids, deterministic min(struct(d2, cid))
-    * tie-break) — one bounded job regardless of K. The literal-
-    * struct-array argmin [[Clustering.assign]] uses is right for
-    * k=8 but at K=256 the 2048-term expression costs seconds of
-    * codegen PER JOB; the join form keeps codegen constant-size and
-    * is the shape that scales (centroid table is M·K rows —
-    * broadcast by construction). */
-  private def pqAssign(sv: DataFrame, books: DataFrame): DataFrame = {
-    val d2 = graft.functions.VectorFunctions.dot(col("v"), col("v")) -
-      lit(2.0) * graft.functions.VectorFunctions.dot(col("v"), col("c")) +
-      col("c2")
-    sv.join(broadcast(books), "sub")
-      .select(col("vec_id"), col("sub"), col("v"),
-              struct(d2.as("d2"), col("cid")).as("sc"))
-      .groupBy("vec_id", "sub")
-      .agg(min(col("sc")).getField("cid").as("code"),
-           first(col("v")).as("v"))
+  /** (vec_id, code64): each vector's M codes against `book`
+    * ((subspace, centroid id) -> centroid, [[Clustering.assign]]),
+    * bit-packed (bit_or + shiftleft, NOT arithmetic: code_7 << 56
+    * lands in the sign bit, which ANSI multiplication rejects as
+    * overflow). */
+  private def pqCodes(vecs: DataFrame, book: Map[(Int, Int), Seq[Double]]): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val books = book.toSeq.map { case ((g, cid), c) => (g, cid, c) }.toDF("g", "cid", "c")
+    Clustering.assign(pqSubvecs(vecs), books)
+      .groupBy(col("id").as("vec_id"))
+      .agg(expr("bit_or(shiftleft(CAST(cid AS BIGINT), 8 * g))").as("code64"))
   }
 
-  /** Content-keyed PQ index: trains the M codebooks with a
-    * fixed-iteration Lloyd loop over a deterministic hash-SAMPLE of
-    * the corpus (≤ ~4k vectors — the standard PQ practice; codebook
-    * quality saturates long before full-corpus training, and the
-    * sample bounds train cost at any corpus size), encodes EVERY
-    * vector with one join-argmin pass, and materializes
-    * codebook.parquet (M·K rows — model state) plus the PQ posting
-    * table. At-rest layout: the 8 one-byte codes PACKED into one
-    * LONG word (code_j in bits 8j..8j+7) — a fixed-width column
+  /** Content-keyed PQ index: trains the M codebooks with
+    * [[Clustering.lloyd]] (one group per subspace) over a
+    * deterministic hash-SAMPLE of the corpus (≤ ~4k vectors — the
+    * standard PQ practice; codebook quality saturates long before
+    * full-corpus training, and the sample bounds train cost at any
+    * corpus size), encodes EVERY vector with one join-argmin pass, and
+    * materializes codebook.parquet (M·K rows — model state) plus the
+    * PQ posting table. At-rest layout: the 8 one-byte codes PACKED into
+    * one LONG word (code_j in bits 8j..8j+7) — a fixed-width column
     * parquet stores tightly, vs an array<int> paying per-element
     * overhead; this is what makes the ≤¼-of-int8 size contract hold
-    * even where row keys dominate. Home-side index only: no pm
-    * column (probe masks live on the probe side, which reads the
-    * float index). The cached value is the index dir plus its
-    * codebook collected to the driver ([[pqCodebookOf]]): the
-    * codebook is frozen for the dir's lifetime, so each query
-    * execution reuses it instead of re-collecting 2048 rows. */
+    * even where row keys dominate. Home-side index only: no pm column
+    * (probe masks live on the probe side, which reads the float
+    * index). The cached value is the index dir plus its codebook on
+    * the driver: the codebook is frozen for the dir's lifetime, so
+    * each query execution and each incremental encode reuses it
+    * instead of re-reading 2048 rows. */
   private val pqIndexes =
     IndexCache.artifact[(String, Map[(Int, Int), Seq[Double]])](
         "embeddings", "graft_ann_pq") { (s, d, out) =>
-      buildPqIndex(s, d, PqTables, PqFlips, PqOccupancy, out)
-      (out, pqCodebookOf(s, out))
+      (out, buildPqIndex(s, d, PqTables, PqFlips, PqOccupancy, out))
     }
 
   /** The PQ index build, parameterized for the [[graft.tools.PqTune]]
@@ -362,106 +354,62 @@ object Quant {
     * and probes.parquet (vec_id, tbl, bucket, pm — probe routing; in
     * production this is computed per QUERY vector at query time, it
     * is materialized here only because the benchmark's query set is
-    * the corpus itself), all under `dir`. */
+    * the corpus itself), all under `dir`. Returns the codebook:
+    * (subspace, centroid id) -> centroid. */
   private[graft] def buildPqIndex(s: SparkSession, d: String,
-                                  tables: Int, flips: Int,
-                                  occupancy: Long, dir: String): Unit = {
-      import s.implicits._
-      // one narrow scan of the embeddings table — NOT a distinct()
-      // over the float index's n·T posting rows (same vn values: the
-      // postings' vn column is this very expression)
-      val vecs = Similarity.normalized(s, d)
-      val n = vecs.count()
-      // deterministic ~4k-vector training sample by HASH of vec_id —
-      // id-agnostic, unlike `vec_id % stride`, which grossly
-      // under-samples any sparse or offset id domain (ids all ≡ 1
-      // mod stride would sample NOTHING). md5-low60 mod 2^20 < frac
-      // gives every id the same inclusion probability whatever the
-      // id distribution looks like.
-      val keepBelow = math.min(1L << 20, math.max(1L, (4096.0 / n * (1 << 20)).toLong))
-      val sampled = vecs.filter(
-        pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 15),
-                  16, 10).cast("long"), lit(1L << 20)) < lit(keepBelow))
-      val train = pqSubvecs(sampled).persist()
-      try {
-        // init: the K lowest sampled vec_ids' subvectors, per subspace
-        var books: Map[(Int, Int), Seq[Double]] =
-          train.select(col("sub"), col("vec_id"), col("v"))
-            .withColumn("rn", row_number().over(
-              Window.partitionBy("sub").orderBy("vec_id")))
-            .filter(col("rn") <= PqK)
-            .collect()
-            .map(r => ((r.getInt(0), r.getInt(3) - 1), r.getSeq[Double](2)))
-            .toMap
-        require(books.nonEmpty,
-          s"pq codebook init: hash sample of the $n-vector corpus came " +
-            "back empty — corpus has no vectors (an empty embeddings " +
-            "table upstream), since hash sampling keeps >=1 in expectation " +
-            "for any non-empty id domain")
-        def booksDf = books.toSeq
-          .map { case ((j, c), v) => (j, c, v, v.map(x => x * x).sum) }
-          .toDF("sub", "cid", "c", "c2")
-        // Lloyd over the sample: join-argmin assign + the exact 2^50
-        // DECIMAL mean carrier (subvectors are 2^-26-grid-snapped, so
-        // the carrier holds by construction — see pqSubvecs)
-        val S = 1125899906842624.0 // 2^50
-        for (_ <- 1 to PqIters) {
-          val means = pqAssign(train, booksDf)
-            .select(col("sub"), col("code"),
-                    posexplode(col("v")).as(Seq("dd", "x")))
-            .groupBy("sub", "code", "dd")
-            .agg(sum((col("x") * S).cast("decimal(38,0)")).as("sx"),
-                 count(lit(1)).as("nn"))
-            .select(col("sub"), col("code"), col("dd"),
-                    (col("sx").cast("double") / (lit(S) * col("nn"))).as("m"))
-            .collect()
-            .groupBy(r => (r.getInt(0), r.getInt(1)))
-            .map { case (k, rows) =>
-              val c = new Array[Double](PqDSub)
-              rows.foreach(r => c(r.getInt(2)) = r.getDouble(3))
-              k -> c.toSeq
-            }
-          books = books.map { case (k, old) => k -> means.getOrElse(k, old) }
-        }
-        booksDf.withColumnRenamed("c", "centroid").drop("c2")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/codebook.parquet")
-        // encode EVERY vector: one join-argmin pass, codes bit-packed
-        // (bit_or + shiftleft, NOT arithmetic: code_7 << 56 lands in
-        // the sign bit, which ANSI multiplication rejects as overflow)
-        val codes = pqAssign(pqSubvecs(vecs), booksDf)
-          .groupBy("vec_id")
-          .agg(expr("bit_or(shiftleft(CAST(code AS BIGINT), 8 * sub))")
-            .as("code64"))
-        // the PQ tier's OWN occupancy-sized bucket space (see
-        // [[PqOccupancy]]) — NOT the float index's √n buckets
-        val idx = Similarity.annIndex(vecs, n, tables, flips,
-            targetOccupancy = Some(occupancy))
-          .persist()
-        try {
-          idx.select(col("tbl"), col("bucket"), col("vec_id"))
-            .join(codes, "vec_id")
-            .write.mode("overwrite").parquet(s"$dir/postings.parquet")
-          idx.select(col("vec_id"), col("tbl"), col("bucket"), col("pm"))
-            .write.mode("overwrite").parquet(s"$dir/probes.parquet")
-        } finally { idx.unpersist(false); () }
-      } finally { train.unpersist(false); () }
+                                  tables: Int, flips: Int, occupancy: Long,
+                                  dir: String): Map[(Int, Int), Seq[Double]] = {
+    // one narrow scan of the embeddings table — NOT a distinct()
+    // over the float index's n·T posting rows (same vn values: the
+    // postings' vn column is this very expression)
+    val vecs = Similarity.normalized(s, d)
+    val n = vecs.count()
+    // deterministic ~4k-vector training sample by HASH of vec_id —
+    // id-agnostic, unlike `vec_id % stride`, which grossly
+    // under-samples any sparse or offset id domain (ids all ≡ 1
+    // mod stride would sample NOTHING). md5-low60 mod 2^20 < frac
+    // gives every id the same inclusion probability whatever the
+    // id distribution looks like.
+    val keepBelow = math.min(1L << 20, math.max(1L, (4096.0 / n * (1 << 20)).toLong))
+    val sampled = vecs.filter(
+      pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 15),
+                16, 10).cast("long"), lit(1L << 20)) < lit(keepBelow))
+    // the sample is bounded (~4k vectors x M subspaces) at any corpus
+    // size, so training runs at width 1
+    val book = Iterate(s, 1) { loop =>
+      val train = Clustering.pointTable(loop, pqSubvecs(sampled))
+      val books = Clustering.lloyd(loop, train, PqK, PqIters)
+      loop.release(train)
+      books.select(col("g").as("sub"), col("cid"), col("c").as("centroid")).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/codebook.parquet")
+      val book = loop.collect(books)
+        .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
+      loop.release(books)
+      book
+    }
+    // the PQ tier's OWN occupancy-sized bucket space (see
+    // [[PqOccupancy]]) — NOT the float index's √n buckets
+    val idx = Similarity.annIndex(vecs, n, tables, flips,
+        targetOccupancy = Some(occupancy))
+      .persist()
+    try {
+      idx.select(col("tbl"), col("bucket"), col("vec_id"))
+        .join(pqCodes(vecs, book), "vec_id")
+        .write.mode("overwrite").parquet(s"$dir/postings.parquet")
+      idx.select(col("vec_id"), col("tbl"), col("bucket"), col("pm"))
+        .write.mode("overwrite").parquet(s"$dir/probes.parquet")
+    } finally { idx.unpersist(false); () }
+    book
   }
-
-  /** The codebook of the PQ index under `idxDir`, collected to the
-    * driver: (subspace, centroid id) -> centroid. */
-  private[graft] def pqCodebookOf(spark: SparkSession,
-                                  idxDir: String): Map[(Int, Int), Seq[Double]] =
-    spark.read.parquet(s"$idxDir/codebook.parquet").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2)))
-      .toMap
 
   private[graft] def pqPostings(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.loadPath(spark, pqIndexPath(spark, dir))
-  private[graft] def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.loadPath(spark, s"${pqIndexes.get(spark, dir)._1}/codebook.parquet")
   private[graft] def pqIndexPath(spark: SparkSession, dir: String): String =
     s"${pqIndexes.get(spark, dir)._1}/postings.parquet"
+
+  /** The corpus' frozen PQ codebook: (subspace, centroid id) -> centroid. */
+  private[graft] def pqCodebook(spark: SparkSession, dir: String): Map[(Int, Int), Seq[Double]] =
+    pqIndexes.get(spark, dir)._2
 
   /** Incremental PQ encode: NEW vectors (vec_id, vn) coded against
     * the corpus' FROZEN codebook — the append path of the PQ index
@@ -474,17 +422,8 @@ object Quant {
     * whole-index event — exactly how production PQ deployments
     * version codebooks. */
   def encodePqAgainst(spark: SparkSession, dir: String,
-                      vecs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val books = pqCodebook(spark, dir)
-      .select(col("sub"), col("cid"),
-              transform(col("centroid"), x => x.cast("double")).as("c"))
-      .withColumn("c2", graft.functions.VectorFunctions.dot(col("c"), col("c")))
-    pqAssign(pqSubvecs(vecs), books)
-      .groupBy("vec_id")
-      .agg(expr("bit_or(shiftleft(CAST(code AS BIGINT), 8 * sub))")
-        .as("code64"))
-  }
+                      vecs: DataFrame): DataFrame =
+    pqCodes(vecs, pqCodebook(spark, dir))
 
   /** ADC shortlist depth before the exact refine (r15 PqTune: deeper
     * shortlists are where PQ recall actually lives — R=30→80 bought
@@ -512,7 +451,7 @@ object Quant {
   }
 
   /** The IVFADC+R search over a given PQ index dir and its collected
-    * codebook `cb` ([[pqCodebookOf]]), parameterized for the
+    * codebook `cb` ([[buildPqIndex]]'s result), parameterized for the
     * [[graft.tools.PqTune]] sweep. */
   private[graft] def annPqFrom(spark: SparkSession, dir: String, idxDir: String,
                                cb: Map[(Int, Int), Seq[Double]],

@@ -838,41 +838,48 @@ object Similarity {
     * this operator doesn't have to be). */
   private val CentroidScale: Double = 1125899906842624.0 // 2^50
 
+  /** The exact mean vector of `v` (an array of doubles) per `keys`
+    * group of `rows`: (keys…, c), `c` in dim order. Each component
+    * rides the [[CentroidScale]] carrier: x·2⁵⁰ cast to DECIMAL(38,0),
+    * summed per (keys, dim), divided once by 2⁵⁰·n. A value whose
+    * x·2⁵⁰ is not integral raises ("…fraction bits…") instead of
+    * being silently rounded. Scale: one (keys, dim) partial-combined
+    * shuffle of n·dims narrow rows, then one regroup of the
+    * |groups|·dims means; `collect_list` sees exactly `dims` elements
+    * per group. [[centroidDrift]] and [[Clustering.lloyd]] use it. */
+  private[graft] def meanVectors(rows: DataFrame, keys: Seq[String], v: Column): DataFrame = {
+    val S = CentroidScale
+    val x = col("x")
+    val xs = when(x * S === floor(x * S), (x * S).cast("decimal(38,0)"))
+      .otherwise(raise_error(concat(
+        lit("exact mean: value has >50 fraction bits: "), x.cast("string"))))
+    rows.select(keys.map(col) :+ posexplode(v).as(Seq("dim", "x")): _*)
+      .groupBy((keys :+ "dim").map(col): _*)
+      .agg((sum(xs).cast("double") / (lit(S) * count(lit(1)))).as("mu"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("dim"), col("mu")))),
+                     s => s("mu")).as("c"))
+  }
+
   /** Per-group embedding centroids and pairwise centroid cosine — the
     * embedding-space drift report between corpus slices (labels,
     * sources, time buckets): a falling inter-centroid cosine means the
     * slices are pulling apart semantically.
     *
     * Scale: the only fact-table-sized stage is the (group, dim)
-    * partial-combined sum over the exact DECIMAL carrier — n·dims
-    * narrow rows, one shuffle bounded by |groups|·dims. Centroid
-    * assembly and the pairwise cosine run on |groups| rows (bounded:
-    * label/source cardinality doesn't grow with corpus size — the same
-    * contract as the k-means centroid table). `collect_list` per group
-    * sees exactly `dims` elements. The per-element integrality guard
-    * raises rather than silently rounding a sub-2⁻²⁶ value.
+    * exact-mean sum ([[meanVectors]]) — n·dims narrow rows, one
+    * shuffle bounded by |groups|·dims. Centroid assembly and the
+    * pairwise cosine run on |groups| rows (bounded: label/source
+    * cardinality doesn't grow with corpus size — the same contract as
+    * the k-means centroid table).
     */
   def centroidDrift(embeddings: DataFrame,
                     groupCol: String = "label"): DataFrame = {
     VectorFunctions.register(embeddings.sparkSession)
-    val S = CentroidScale
-    val vals = embeddings
-      .select(col(groupCol).as("grp"),
-              posexplode(transform(col("embedding"), x => x.cast("double")))
-                .as(Seq("dim", "x")))
-      .withColumn("xs",
-        when(col("x") * S === floor(col("x") * S),
-             (col("x") * S).cast("decimal(38,0)"))
-          .otherwise(raise_error(concat(
-            lit("centroidDrift: value has >50 fraction bits: "),
-            col("x").cast("string")))))
-    val cent = vals.groupBy("grp", "dim")
-      .agg(sum(col("xs")).as("s"), count(lit(1)).as("n"))
-      .select(col("grp"), col("dim"),
-              (col("s").cast("double") / (lit(S) * col("n"))).as("mu"))
-    val arrs = cent.groupBy("grp")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("mu")))),
-                     s => s("mu")).as("c"))
+    val arrs = meanVectors(
+      embeddings.select(col(groupCol).as("grp"),
+                        transform(col("embedding"), x => x.cast("double")).as("v")),
+      Seq("grp"), col("v"))
     val counts = embeddings.groupBy(col(groupCol).as("grp"))
       .agg(count(lit(1)).as("n"))
     val sized = arrs.join(counts, "grp")

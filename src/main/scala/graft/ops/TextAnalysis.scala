@@ -399,9 +399,9 @@ object TextAnalysis {
   /** z = (w·x)/1000 with a FIXED left-to-right association — the same
     * expression shape the oracle writes, so IEEE arithmetic makes the
     * Double bit-identical across engines. */
-  private def zCol(w: Array[Double]): Column =
-    (lit(w(0)) * col("x1") + lit(w(1)) * col("x2") +
-     lit(w(2)) * col("x3") + lit(w(3)) * col("x4")) / lit(1000.0)
+  private def zCol(w: Seq[Column]): Column =
+    (w(0) * col("x1") + w(1) * col("x2") +
+     w(2) * col("x3") + w(3) * col("x4")) / lit(1000.0)
 
   /** The RATIONAL sigmoid σ̃(z) = 0.5 + z/(2(1+|z|)) — the "fast
     * sigmoid". Chosen over exp's logistic deliberately: every
@@ -419,35 +419,39 @@ object TextAnalysis {
     * the [[Clustering.kmeans]] exact-carrier discipline: integer sums
     * are fold-order-independent, so partition order can't move a bit
     * and the unrolled DuckDB oracle reproduces every iteration
-    * exactly. Per iteration: one narrow scan, d=4 aggregate sums, a
-    * 4-double collect (bounded model state, the k·d k-means shape).
-    * At 100 TB: iters × one pass over the materialized stats table,
-    * no shuffle at all (aggregates are map-side partial + one
+    * exactly. A loop on [[Iterate.rounds]]: the features are one
+    * checkpoint (n observed on its job), the state is the one-row
+    * (w1..w4) table, and each round reads the weights as carried
+    * scalars, never as literals, so every round runs the same
+    * generated code. Per round: one narrow scan, d=4 aggregate sums,
+    * one job. At 100 TB: iters × one pass over the materialized
+    * features, no shuffle but the global sum's (map-side partial + one
     * reduce). Gradient sums ride DECIMAL(38,0) (|rq·x| ≤ 10¹² per
     * row — Long would overflow past ~10⁶ rows per 10¹² docs). */
   def trainQualityWeights(stats: DataFrame, iters: Int = TrainIters,
                           eta: Double = TrainEta): Array[Double] = {
-    val f = trainFeatures(stats).persist()
-    try {
-      val n = f.count()
+    val spark = stats.sparkSession
+    import spark.implicits._
+    val ws = Seq("w1", "w2", "w3", "w4")
+    // the one exchange of a round is the global sum's, into one partition
+    Iterate(spark, 1) { loop =>
+      val (f, c) = loop.observed(trainFeatures(stats), count(lit(1)))
+      val n = c.getLong(0)
       require(n > 0, "trainQualityWeights: empty input")
-      val w = Array.fill(4)(0.0)
-      for (_ <- 1 to iters) {
+      val (last, _) = loop.rounds(Seq((0.0, 0.0, 0.0, 0.0)).toDF(ws: _*), iters,
+                                  ws.map(w => max(col(w))): _*) { (_, w) =>
         val rq = round((col("y") - sigCol(zCol(w))) * lit(1.0e9)).cast("long")
-        val g = f.select(
-          (0 until 4).map(j =>
-            sum((rq * col(s"x${j + 1}")).cast("decimal(38,0)")).as(s"g$j")): _*)
-          .collect().head
-        var j = 0
-        while (j < 4) {
+        val g = (1 to 4).map(j => sum((rq * col(s"x$j")).cast("decimal(38,0)")).as(s"g$j"))
+        f.agg(g.head, g.tail: _*)
           // same Double expression shape as the oracle's weight CTE:
           // w + eta * (g / (n * 1e12))
-          w(j) = w(j) + eta * (g.getDecimal(j).doubleValue() / (n * 1.0e12))
-          j += 1
-        }
+          .select((0 until 4).map(j =>
+            (w(j) + lit(eta) * (col(s"g${j + 1}").cast("double") / lit(n * 1.0e12))).as(ws(j))): _*)
       }
-      w
-    } finally { f.unpersist(false); () }
+      val row = loop.collect(last).head
+      loop.release(f, last)
+      Array.tabulate(4)(row.getDouble)
+    }
   }
 
   /** Inference with a trained weight artifact — the scoring pass
@@ -458,7 +462,7 @@ object TextAnalysis {
   def scoreQuality(stats: DataFrame, w: Array[Double]): DataFrame =
     trainFeatures(stats)
       .select(col("doc_id"), col("y").cast("int").as("label"),
-              round(sigCol(zCol(w)), 6).as("score"))
+              round(sigCol(zCol(w.toSeq.map(lit))), 6).as("score"))
       .withColumn("keep", col("score") >= 0.5)
       .orderBy("doc_id")
 

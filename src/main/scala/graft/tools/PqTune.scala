@@ -28,8 +28,7 @@ object PqTune {
     println(f"${"B"}%4s ${"q"}%2s ${"R"}%4s ${"posts"}%9s ${"recall@3"}%9s ${"sec"}%7s")
     for (occ <- Seq(32L, 64L, 128L); q <- Seq(3, 4)) {
       val idxDir = Shims.tempDir("graft_pq_tune").toString
-      Quant.buildPqIndex(spark, dir, Quant.PqTables, q, occ, idxDir)
-      val cb = Quant.pqCodebookOf(spark, idxDir)
+      val cb = Quant.buildPqIndex(spark, dir, Quant.PqTables, q, occ, idxDir)
       val nPosts = spark.read.parquet(s"$idxDir/postings.parquet").count()
       for (r <- Seq(30, 50, 80)) {
         val t0 = System.nanoTime()

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUti
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DataType
 
 /** The `private[sql]` doorways a third-party plan-level extension
   * needs: wrapping a [[LogicalPlan]] into a public DataFrame of a
@@ -59,6 +60,9 @@ object Shims {
     * recomputed). */
   def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** `t` with every nested field, array element and map value nullable. */
+  def nullable(t: DataType): DataType = t.asNullable
 
   /** A Catalyst expression as a Column. */
   def column(e: Expression): Column = org.apache.spark.sql.classic.ExpressionUtils.column(e)

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.{Clustering, Iterate}
 
 /** Deterministic k-means goldens — structure the FP-order-exempt
   * oracle can't pin: planted well-separated clusters recovered
@@ -72,5 +75,45 @@ class ClusteringSpec extends AnyFunSuite {
     assert(out.length == emb.count())
     assert(out.forall(r => r.getInt(1) >= 0 && r.getInt(1) < 8))
     assert(out.forall(r => r.getDouble(2) >= 0))
+  }
+
+  /** The (g, cid, c) model [[Clustering.lloyd]] trains on `points` in
+    * a loop of `width`. */
+  private def model(points: DataFrame, k: Int, iters: Int,
+                    width: Int): Set[(Int, Int, Seq[Double])] =
+    Iterate(spark, width) { loop =>
+      val p = Clustering.pointTable(loop, points)
+      val books = Clustering.lloyd(loop, p, k, iters)
+      val out = books.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSet
+      loop.release(p, books)
+      out
+    }
+
+  /** `embeddings` as the (g, id, v) points of group `g`. */
+  private def group(g: Int, embeddings: DataFrame): DataFrame =
+    embeddings.select(lit(g).as("g"), col("vec_id").as("id"),
+                      transform(col("embedding"), x => x.cast("double")).as("v"))
+
+  test("lloyd over groups: each group gets exactly the centroids a one-group run gives it") {
+    val a = group(0, planted)
+    val b = group(1, Tables.embeddings(spark, TestSpark.sf0001))
+    // n < k: two points, two centroids, each the point itself
+    val c = group(2, Seq((5L, Seq(1f, 2f)), (9L, Seq(3f, 4f))).toDF("vec_id", "embedding"))
+    val grouped = model(a.union(b).union(c), k = 3, iters = 4, width = 3)
+    val alone = Seq(a, b, c).flatMap(model(_, k = 3, iters = 4, width = 1)).toSet
+    assert(grouped == alone)
+    assert(grouped.count(_._1 == 0) == 3 && grouped.count(_._1 == 1) == 3)
+    assert(grouped.filter(_._1 == 2).map(_._3) == Set(Seq(1.0, 2.0), Seq(3.0, 4.0)))
+    val e = intercept[IllegalArgumentException](model(a.limit(0), k = 3, iters = 2, width = 3))
+    assert(e.getMessage.contains("empty"))
+  }
+
+  test("lloyd: a sub-2^-50-grid value trips the exact-mean guard") {
+    // 2^-51 as a float: x * 2^50 = 0.5 — not integral, must raise
+    val tiny = java.lang.Float.intBitsToFloat((127 - 51) << 23)
+    assert(tiny.toDouble == math.pow(2, -51))
+    val e = Seq((1L, Seq(tiny, 0f)), (2L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    val ex = intercept[Exception](Graft.kmeans(e, k = 1, iters = 1))
+    assert(ex.getMessage.contains("fraction bits"))
   }
 }

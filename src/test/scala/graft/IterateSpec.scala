@@ -16,7 +16,7 @@ import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedup, Graph, Iterate}
+import graft.ops.{Clustering, Dedup, Graph, Iterate, TextAnalysis}
 
 /** The loop skeleton every iterative operator runs on ([[Iterate]]):
   * round caps fail loudly, and a loop's AQE-off fixed-width regime
@@ -108,6 +108,12 @@ class IterateSpec extends AnyFunSuite {
   private def chain(n: Int): DataFrame =
     (0L until n - 1L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
 
+  /** Quality stats of 20 long, diverse docs and 20 short, repetitive ones. */
+  private lazy val quality =
+    ((0 until 20).map(i => (i.toLong, 100, 100, 0)) ++ (20 until 40).map(i => (i.toLong, 10, 1, 10)))
+      .toDF("doc_id", "n_toks", "n_distinct", "n_stop")
+  private lazy val vectors = Tables.embeddings(spark, TestSpark.sf0001)
+
   /** Jobs `body` starts. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -151,6 +157,17 @@ class IterateSpec extends AnyFunSuite {
       val cc = jobsOf { rounds = Dedup.clustersAndRounds(chain(n))._2 }
       assert(cc <= 2 + rounds, s"clustersAndRounds over $n nodes: $cc jobs, $rounds rounds")
     }
+    // the model loops: the trainer's setup is the features and the
+    // initial weights, and one job collects the last weights; Lloyd's
+    // is the points and the seeds, each round also broadcasts the
+    // centroid table, and the final assignment is a broadcast and a
+    // checkpoint (plus the sort's sampling job at width > 1)
+    for (iters <- Seq(2, 6)) {
+      val tq = jobsOf(TextAnalysis.trainQualityWeights(quality, iters))
+      assert(tq <= 3 + iters, s"trainQualityWeights($iters): $tq jobs")
+      val km = jobsOf(Clustering.kmeans(vectors, iters = iters))
+      assert(km <= 5 + 2 * iters, s"kmeans($iters): $km jobs")
+    }
   }
 
   test("fixed-round loops: rounds 2..n compile no new code") {
@@ -174,7 +191,13 @@ class IterateSpec extends AnyFunSuite {
         () => Graph.kCore(path(8), 2)),
       // one edge converges in one round, the 40-node chain in several
       ("clustersAndRounds", () => Dedup.clustersAndRounds(chain(2)),
-        () => Dedup.clustersAndRounds(chain(40))))
+        () => Dedup.clustersAndRounds(chain(40))),
+      // the model loops: weights and centroids are carried or broadcast
+      // data, never literals
+      ("trainQualityWeights", () => TextAnalysis.trainQualityWeights(quality, iters = 1),
+        () => TextAnalysis.trainQualityWeights(quality, iters = 6)),
+      ("kmeans", () => Clustering.kmeans(vectors, iters = 1),
+        () => Clustering.kmeans(vectors, iters = 6)))
     for ((name, warm, run) <- loops) {
       warm()
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -237,6 +260,8 @@ class IterateSpec extends AnyFunSuite {
     assert(held(Graph.sssp(costed(path(8)), origin)) <= 2)
     assert(held(Graph.kCore(path(8), 2)) <= 1)
     assert(held(Dedup.clustersAndRounds(chain(40))._1) <= 1)
+    // kmeans keeps only its result: not its points, seeds or centroids
+    assert(held(Clustering.kmeans(vectors, iters = 6)) <= 1)
   }
 
   test("concurrent: TPC-H q1 beside a running pageRank keeps AQE and its serial result") {

@@ -117,7 +117,7 @@ class QuantSpec extends AnyFunSuite {
     val pb = bytes(Quant.pqIndexPath(spark, dir))
     assert(pb <= qb / 4, s"pq index $pb bytes vs int8 $qb")
     // codebook is bounded model state: M*K rows
-    assert(Quant.pqCodebook(spark, dir).count() == Quant.PqM * Quant.PqK)
+    assert(Quant.pqCodebook(spark, dir).size == Quant.PqM * Quant.PqK)
     // every posting row carries a packed code word, and the PQ table
     // covers the same rows as the int8 posting table
     val posts = Quant.pqPostings(spark, dir)
