@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Parquet table loaders for the driver test data
@@ -122,33 +123,50 @@ object Tables {
     * the read"). The driver fixtures are single-row-group parquet
     * files — one split, so scan-adjacent narrow compute (regex chains,
     * codec work, shingle hashing) serializes on ONE core no matter how
-    * many the session has. A production corpus arrives in thousands of
-    * splits and takes the no-op branch, so no shuffle is ever added
-    * at scale — the condition, not the repartition, is the contract.
-    * Callers must be row-local or order-independent downstream
-    * (round-robin redistribution reorders rows across partitions).
+    * many the session has. Callers must be row-local or
+    * order-independent downstream (round-robin redistribution reorders
+    * rows across partitions).
     *
-    * Width (r17): derived from the input's ESTIMATED BYTES — one task
-    * per `bytesPerTask` of input, clamped to parallelism — instead of
-    * `defaultParallelism` outright. The r16 form fanned kilobyte
-    * fixtures to every core; at high core counts the fan-out overhead
-    * exceeded the win (five widened queries ran FASTER at 8 cores
-    * than 32 in the r16 driver's scaling block). A bytes-derived width
-    * is the same decision at every core count, so the helper no longer
-    * encodes the local machine's size. The default budget is small
-    * (64 KB/task) because every call site is scan-adjacent HEAVY
-    * compute — image/audio decode, regex extraction, shingle hashing —
-    * where CPU per byte, not bytes, is the bound. The no-op test uses
-    * the same estimate (splits the scan would produce at
-    * `maxPartitionBytes`), so construction never forces physical
-    * planning of the pre-widen plan (the r16 `df.rdd` probe did). */
+    * Width (r17): one task per `bytesPerTask` of the input's ESTIMATED
+    * bytes, clamped to `defaultParallelism` — the same decision at
+    * every core count, so kilobyte fixtures are not fanned out to
+    * every core of a large box. The default budget is small (8 KB per
+    * task) because every call site is scan-adjacent HEAVY compute —
+    * image/audio decode, regex extraction, shingle hashing — where CPU
+    * per byte, not bytes, is the bound.
+    *
+    * No-op test: the input's SPLITS ([[scanSplits]]) against that
+    * width. A file scan counts its real files, so an input written as
+    * several part files (the wide-built ANN index, a production
+    * corpus) is left as it is. The guarantee: an input with at least
+    * `defaultParallelism` splits is returned as the same object, with
+    * no exchange added — at 100 TB, with thousands of splits, this is
+    * always that branch. Deciding never runs a job or plans the
+    * physical plan. */
   def widen(df: DataFrame, bytesPerTask: Long = 8L << 10): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val want = (est / bytesPerTask + 1).min(BigInt(p)).toInt
+    if (scanSplits(df) >= want) df else df.repartition(want)
+  }
+
+  /** Splits the scans under `df`'s optimized plan produce, summed over
+    * its leaves (exact for a scan, filter, projection or union of
+    * scans). A file leaf counts `len / filesMaxPartitionBytes + 1` per
+    * file of its already-listed file index, so no I/O. Spark cuts no
+    * split larger than that, and packs small files no tighter than
+    * about `totalBytes / defaultParallelism` per task, so a count of at
+    * least `defaultParallelism` plans about that many tasks. Other
+    * leaves (checkpoints, local relations) count their size estimate
+    * at the same split size. */
+  private[graft] def scanSplits(df: DataFrame): BigInt = {
     val splitBytes = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val splitEst = est / splitBytes + 1
-    if (splitEst >= want) df else df.repartition(want)
+    def splits(bytes: BigInt): BigInt = bytes / splitBytes + 1
+    df.queryExecution.optimizedPlan.collectLeaves().map {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.listFiles(Nil, Nil).flatMap(_.files).map(f => splits(f.getLen)).sum
+      case leaf => splits(leaf.stats.sizeInBytes)
+    }.sum
   }
 
   /** Width for an ITERATION's checkpointed tables, derived from the

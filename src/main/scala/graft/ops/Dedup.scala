@@ -334,7 +334,7 @@ object Dedup {
     * planted-duplicate recall properties ScalaTest already asserts.
     */
   def qDedupNear(spark: SparkSession, dir: String): DataFrame =
-    nearDupPairs(Tables.docTokens(spark, dir))
+    nearDupPairs(Tables.docTokensWide(spark, dir))
 
   /** [[qDedupNear]]'s engine over any (doc_id, toks) DataFrame — the
     * library entry point ([[graft.Graft.nearDupPairs]]). `bands` is
@@ -353,22 +353,20 @@ object Dedup {
     // verify joins — without it each consumer re-parses, re-hashes and
     // re-sorts every document (4× the dominant cost). At cluster scale
     // this is the signature table you'd materialize to storage.
-    // NOT widened (r16, measured): unlike q_dedup_span's explode
-    // pipeline, widening this shingle projection cost more than the
-    // one-split materialization it parallelized (2.4 vs 1.75 s — the
-    // verify joins broadcast the docs side, and the exchange +
-    // 32-partition cache taxed every consumer).
+    // Not widened here: the input arrives as wide as its caller made
+    // it (q_dedup_near reads Tables.docTokensWide, so the exchange
+    // moves raw text and this shingle pass runs on every split). r16
+    // and r17 measured a widen here as a loss at sf0.1 (2.4 vs 1.75 s,
+    // then 1.74 vs 1.66 s) with 32-wide partitions of token arrays;
+    // the text widen at the byte-derived width measured level or
+    // better at sf0.1 and on the 3x corpus (plans/corpus_widen.txt).
     // EAGER localCheckpoint, not persist (r17, measured): with a lazy
     // cache the self-join sides and verify joins all start on a COLD
     // cache and each recomputes the parse+hash+sort pipeline into it
     // (ProfileOne: three serial ~530 ms single-task stages per run —
     // the r16 priming count() guarded exactly this, but as an extra
     // job; the eager checkpoint is the same materialization without
-    // one). Jobs 16 → 9, stage work 3.3 → 1.0 s (ProfileOne). Still
-    // NOT widened: re-measured under the checkpoint structure and the
-    // widen stayed a loss (q_dedup_near 1.74 vs 1.66 min-of-5,
-    // q_dedup_index_append 1.52 vs 1.15 — the exchange taxes the
-    // materialization more than the one-split shingle pass costs).
+    // one). Jobs 16 → 9, stage work 3.3 → 1.0 s (ProfileOne).
     val docs = docToks
       .select(col("doc_id"), shingleHashes(col("toks")).as("sh"))
       .filter(size(col("sh")) > 0)

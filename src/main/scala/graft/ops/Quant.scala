@@ -177,7 +177,7 @@ object Quant {
       .otherwise(raise_error(concat(
         lit(s"projectEmbeddings: expected $Dim-dim embedding, got "),
         size(col("vd")).cast("string"))))
-    Tables.embeddings(spark, dir)
+    Tables.widen(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
       .crossJoin(planes)
       .select(col("vec_id"), col("dim"), value.as("value"))
@@ -212,8 +212,9 @@ object Quant {
     }
 
   private[graft] def quantPostings(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.widen(graft.Tables.loadPath(spark, quantIndexPaths.get(spark, dir)),
-      bytesPerTask = 64L << 10)
+    // no widen: written from the wide-built float index's part files
+    // ([[Similarity.annPostings]]), it is read as wide as it was built
+    graft.Tables.loadPath(spark, quantIndexPaths.get(spark, dir))
   private[graft] def quantIndexPath(spark: SparkSession, dir: String): String =
     quantIndexPaths.get(spark, dir)
 

@@ -617,9 +617,14 @@ object Similarity {
   /** Builds the LSH posting table for a corpus: one row per (vector,
     * table) holding the bucket code, the directed probe masks, and the
     * normalized vector (the IVF posting-list layout — the inverted
-    * list carries the vector). This is the OFFLINE index build. */
+    * list carries the vector). This is the OFFLINE index build. It
+    * runs after [[Tables.widen]] of the embeddings scan, so the
+    * index lands as several part files and every reader (the search,
+    * [[semanticMatchesAnn]], the int8 index build) scans it wide
+    * without an exchange of its vectors. */
   private def buildAnnIndex(spark: SparkSession, dir: String): DataFrame =
-    annIndex(normalized(spark, dir), corpusSize(spark, dir))
+    annIndex(normalizeEmbeddings(Tables.widen(Tables.embeddings(spark, dir))),
+             corpusSize(spark, dir))
 
   /** The index build over any normalized (vec_id, vn) DataFrame with
     * corpus size n — shared by the dir-keyed materialized path and the
@@ -714,10 +719,13 @@ object Similarity {
     IndexCache.materializedParquet("embeddings", "graft_ann_index")(
       buildAnnIndex)
   private[graft] def annPostings(spark: SparkSession, dir: String): DataFrame =
-    // NOT widened here: the accessor also feeds the quant-index WRITE
-    // (widening there fans the at-rest table into tiny part files —
-    // QuantSpec's size golden caught it); search-side consumers widen
-    // at their own entry ([[annCandidates]])
+    // Read as built: [[buildAnnIndex]] widens before it writes, so the
+    // index is one part file per build task and every reader (the
+    // search, [[semanticMatchesAnn]], the int8 index write) scans it
+    // wide with no exchange. A read-side widen here once fanned the
+    // at-rest int8 table into tiny part files (QuantSpec's size golden
+    // caught it); with the wide build the int8 index keeps the float
+    // index's files and the goldens hold (plans/corpus_widen.txt).
     graft.Tables.loadPath(spark, indexPaths.get(spark, dir))
   private[graft] def annIndexPath(spark: SparkSession, dir: String): String =
     indexPaths.get(spark, dir)
@@ -743,11 +751,7 @@ object Similarity {
     * exposed separately so AnnRecall can profile the generation stage
     * against the aggregation stage. */
   private[graft] def annCandidates(spark: SparkSession, dir: String): DataFrame =
-    // widen (r16): the single-split posting table would serialize the
-    // whole probe×candidate scan on one task (read-side only)
-    annCandidatesFrom(graft.Tables.widen(annPostings(spark, dir),
-                        bytesPerTask = 64L << 10),
-                      corpusSize(spark, dir))
+    annCandidatesFrom(annPostings(spark, dir), corpusSize(spark, dir))
 
   /** Scored LSH candidates from any posting table ([[annIndex]]). */
   private[graft] def annCandidatesFrom(codes: DataFrame, n: Long,

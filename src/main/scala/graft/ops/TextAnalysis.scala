@@ -794,9 +794,11 @@ object TextAnalysis {
     * derived email, a phone, an IPv4) — the in-query-constructed-input
     * pattern q_map_funcs uses — then runs the actual operator: count
     * emails/phones/IPs and replace each class with a typed mask
-    * token. Pure narrow projection (regex scan per row, no shuffle,
-    * codegen'd `RegExpReplace`/`RegExpExtractAll`) — at 100 TB this is
-    * a full scan and nothing else, the shape PII scrubbing needs. */
+    * token. Pure narrow projection (regex scan per row, codegen'd
+    * `RegExpReplace`/`RegExpExtractAll`); a one-split input is widened
+    * first ([[piiRedact]]), while at 100 TB, with thousands of splits,
+    * this is a full scan and nothing else, the shape PII scrubbing
+    * needs. */
   def qPiiRedact(spark: SparkSession, dir: String): DataFrame = {
     val blob = Tables.customer(spark, dir)
       .select(col("c_custkey").as("id"),
@@ -814,9 +816,11 @@ object TextAnalysis {
   }
 
   /** [[qPiiRedact]]'s engine over any (id, text) DataFrame — the
-    * library entry point ([[graft.Graft.piiRedact]]). */
+    * library entry point ([[graft.Graft.piiRedact]]). The regex kernel
+    * runs after [[Tables.widen]], so a one-split input does not
+    * scan on one core. */
   def piiRedact(rows: DataFrame): DataFrame =
-    rows
+    Tables.widen(rows)
       .select(
         col("id"),
         size(regexp_extract_all(col("text"), lit(EmailRe), lit(0))).as("n_emails"),

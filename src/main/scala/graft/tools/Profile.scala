@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.Shims
 
 /** Layered profile of registered queries: each query runs once cold and
-  * once warm with [[graft.Bench]]'s count, and the warm run is split
-  * into construction (the registry call, eager loop rounds included),
-  * forced physical planning and the action. Jobs and stages are
+  * three times warm with [[graft.Bench]]'s count. The fastest warm run
+  * gives every field but `cold_ms`; it is split into construction (the
+  * registry call, eager loop rounds included), forced physical
+  * planning and the action. Jobs and stages are
   * attributed to the phase that submitted them, so a record says where
   * a query's time went: Catalyst's phase times, the driver job floor
   * (jobs × the latency of a one-task job), executor run/CPU/GC time,
@@ -80,28 +81,36 @@ object Profile {
       r.put("cold_ms", (System.nanoTime() - c0) / 1e6)
       settle(spark)
 
-      val rec = new Recorder
-      sc.addSparkListener(rec)
-      val t = new Array[Long](4)
-      val (df, counted) = try {
-        t(0) = System.nanoTime()
-        sc.setLocalProperty(PhaseKey, "construct")
-        val df = q(spark, dir)
-        t(1) = System.nanoTime()
-        sc.setLocalProperty(PhaseKey, "plan")
-        df.queryExecution.executedPlan
-        t(2) = System.nanoTime()
-        sc.setLocalProperty(PhaseKey, "execute")
-        // the plan `df.count()` runs, kept so its final plan can be printed
-        val counted = df.groupBy().count()
-        r.put("rows", counted.collect().head.getLong(0))
-        t(3) = System.nanoTime()
-        (df, counted)
-      } finally {
-        sc.setLocalProperty(PhaseKey, null)
-        Shims.drainListeners(sc)
-        sc.removeSparkListener(rec)
+      // one warm call: its recorder, phase boundaries, rows and plans
+      def warm() = {
+        val rec = new Recorder
+        sc.addSparkListener(rec)
+        val t = new Array[Long](4)
+        try {
+          t(0) = System.nanoTime()
+          sc.setLocalProperty(PhaseKey, "construct")
+          val df = q(spark, dir)
+          t(1) = System.nanoTime()
+          sc.setLocalProperty(PhaseKey, "plan")
+          df.queryExecution.executedPlan
+          t(2) = System.nanoTime()
+          sc.setLocalProperty(PhaseKey, "execute")
+          // the plan `df.count()` runs, kept so its final plan can be printed
+          val counted = df.groupBy().count()
+          val rows = counted.collect().head.getLong(0)
+          t(3) = System.nanoTime()
+          (rec, t, df, counted, rows)
+        } finally {
+          sc.setLocalProperty(PhaseKey, null)
+          Shims.drainListeners(sc)
+          sc.removeSparkListener(rec)
+          settle(spark)
+        }
       }
+      // the fastest of 3 warm calls: one call right after the cold one
+      // mostly measures JIT warm-up on loop queries
+      val (rec, t, df, counted, rows) = Seq.fill(3)(warm()).minBy(w => w._2(3) - w._2(0))
+      r.put("rows", rows)
       val Seq(constructMs, planMs, executeMs) = (1 to 3).map(i => (t(i) - t(i - 1)) / 1e6)
       val warmMs = (t(3) - t(0)) / 1e6
       val all = rec.stages.toSeq.sortBy(_._2.stageId)
